@@ -549,9 +549,8 @@ object Queries {
               (w & 0xff).toByte, ((w >> 8) & 0x3f).toByte,
               (h & 0xff).toByte, ((h >> 8) & 0x3f).toByte)
             val o = new java.io.ByteArrayOutputStream()
-            def le32(v: Int): Unit = (0 until 4).foreach(k => o.write((v >> (8 * k)) & 0xff))
-            o.write("RIFF".getBytes("US-ASCII")); le32(4 + 8 + pl.length)
-            o.write("WEBPVP8 ".getBytes("US-ASCII")); le32(pl.length)
+            o.write("RIFF".getBytes("US-ASCII")); graft.codec.Bytes.le(o, 4 + 8 + pl.length, 4)
+            o.write("WEBPVP8 ".getBytes("US-ASCII")); graft.codec.Bytes.le(o, pl.length, 4)
             o.write(pl, 0, pl.length); o.toByteArray
           case 4 =>
             val n = 400 + (id % 200).toInt

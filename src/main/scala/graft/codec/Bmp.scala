@@ -29,13 +29,11 @@ package graft.codec
   * bit-exact and SQL oracles can state decoded pixels directly.
   */
 object Bmp {
+  import Bytes.{le, le16, le32}
 
   def isBmp(b: Array[Byte]): Boolean =
     b != null && b.length >= 2 && b(0) == 'B' && b(1) == 'M'
 
-  private def u16(b: Array[Byte], p: Int): Int = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-  private def u32(b: Array[Byte], p: Int): Long = u16(b, p).toLong | (u16(b, p + 2).toLong << 16)
-  private def s32(b: Array[Byte], p: Int): Int = u32(b, p).toInt
 
   def decode(b: Array[Byte]): Either[String, Jpeg.Image] =
     try decodeImpl(b)
@@ -44,16 +42,16 @@ object Bmp {
   private def decodeImpl(b: Array[Byte]): Either[String, Jpeg.Image] = {
     if (!isBmp(b)) return Left("bmp: bad signature")
     if (b.length < 54) return Left("bmp: truncated header")
-    val pixOff = u32(b, 10)
-    val hdrSize = u32(b, 14).toInt
+    val pixOff = le32(b, 10)
+    val hdrSize = le32(b, 14).toInt
     if (hdrSize < 40) return Left(s"bmp: header size $hdrSize unsupported (BITMAPCOREHEADER)")
-    val width = s32(b, 18)
-    val rawHeight = s32(b, 22)
+    val width = le32(b, 18).toInt
+    val rawHeight = le32(b, 22).toInt
     val topDown = rawHeight < 0
     val height = math.abs(rawHeight)
-    val planes = u16(b, 26)
-    val bpp = u16(b, 28)
-    val compression = u32(b, 30).toInt
+    val planes = le16(b, 26)
+    val bpp = le16(b, 28)
+    val compression = le32(b, 30).toInt
     if (planes != 1) return Left("bmp: planes != 1")
     if (compression != 0 && compression != 1 && compression != 2 && compression != 3)
       return Left(s"bmp: compression $compression unsupported")
@@ -75,7 +73,7 @@ object Bmp {
     if (compression == 3) {
       val mOff = if (hdrSize >= 52) 14 + 40 else 14 + hdrSize
       if (mOff + 12 > b.length) return Left("bmp: masks overrun file")
-      maskR = u32(b, mOff).toInt; maskG = u32(b, mOff + 4).toInt; maskB = u32(b, mOff + 8).toInt
+      maskR = le32(b, mOff).toInt; maskG = le32(b, mOff + 4).toInt; maskB = le32(b, mOff + 8).toInt
       def contiguous(m: Int): Boolean =
         m != 0 && { val s0 = java.lang.Integer.numberOfTrailingZeros(m)
           val run = m >>> s0; (run & (run + 1)) == 0 }
@@ -91,7 +89,7 @@ object Bmp {
     if (bpp <= 8) {
       val maxEntries = 1 << bpp
       val used = {
-        val cu = u32(b, 46).toInt
+        val cu = le32(b, 46).toInt
         if (cu == 0) maxEntries else cu
       }
       if (used < 1 || used > maxEntries) return Left("bmp: bad palette size")
@@ -198,7 +196,7 @@ object Bmp {
             out(dst + 1) = palette(3 * idx + 1)
             out(dst + 2) = palette(3 * idx + 2)
           case 16 =>
-            val v = (b(rp + 2 * x) & 0xff) | ((b(rp + 2 * x + 1) & 0xff) << 8)
+            val v = le16(b, rp + 2 * x)
             def chan(mask: Int): Int = {
               val sh = java.lang.Integer.numberOfTrailingZeros(mask)
               val mx = mask >>> sh
@@ -230,18 +228,16 @@ object Bmp {
     val stride = ((width * 3 + 3) / 4) * 4
     val dataLen = stride * height
     val out = new Array[Byte](54 + dataLen)
-    def le16(p: Int, v: Int): Unit = { out(p) = (v & 0xff).toByte; out(p + 1) = ((v >> 8) & 0xff).toByte }
-    def le32(p: Int, v: Int): Unit = { le16(p, v & 0xffff); le16(p + 2, (v >>> 16) & 0xffff) }
     out(0) = 'B'; out(1) = 'M'
-    le32(2, 54 + dataLen) // file size
-    le32(10, 54)          // pixel data offset
-    le32(14, 40)          // BITMAPINFOHEADER
-    le32(18, width)
-    le32(22, height)      // positive: bottom-up
-    le16(26, 1)           // planes
-    le16(28, 24)          // bpp
-    le32(30, 0)           // BI_RGB
-    le32(34, dataLen)
+    le(out, 2, 54 + dataLen, 4) // file size
+    le(out, 10, 54, 4)          // pixel data offset
+    le(out, 14, 40, 4)          // BITMAPINFOHEADER
+    le(out, 18, width, 4)
+    le(out, 22, height, 4)      // positive: bottom-up
+    le(out, 26, 1, 2)           // planes
+    le(out, 28, 24, 2)          // bpp
+    le(out, 30, 0, 4)           // BI_RGB
+    le(out, 34, dataLen, 4)
     var row = 0
     while (row < height) {
       val rp = 54 + (height - 1 - row) * stride
@@ -264,17 +260,15 @@ object Bmp {
     val n = 1 << bpp
     val palBytes = 4 * n
     val out = new Array[Byte](54 + palBytes)
-    def le16(p: Int, v: Int): Unit = { out(p) = (v & 0xff).toByte; out(p + 1) = ((v >> 8) & 0xff).toByte }
-    def le32(p: Int, v: Int): Unit = { le16(p, v & 0xffff); le16(p + 2, (v >>> 16) & 0xffff) }
     out(0) = 'B'; out(1) = 'M'
-    le32(2, 54 + palBytes + dataLen)
-    le32(10, 54 + palBytes)
-    le32(14, 40)
-    le32(18, width); le32(22, height)
-    le16(26, 1); le16(28, bpp)
-    le32(30, compression)
-    le32(34, dataLen)
-    le32(46, n) // colorsUsed
+    le(out, 2, 54 + palBytes + dataLen, 4)
+    le(out, 10, 54 + palBytes, 4)
+    le(out, 14, 40, 4)
+    le(out, 18, width, 4); le(out, 22, height, 4)
+    le(out, 26, 1, 2); le(out, 28, bpp, 2)
+    le(out, 30, compression, 4)
+    le(out, 34, dataLen, 4)
+    le(out, 46, n, 4) // colorsUsed
     var i = 0
     while (i < n && 3 * i + 2 < palette.length) {
       out(54 + 4 * i) = palette(3 * i + 2)     // B

@@ -19,6 +19,7 @@ package graft.codec
   * /EncodedByteAlign). Malformed input returns `Left`, never throws.
   */
 object CcittG4 {
+  import Bytes.{MsbBitReader, MsbBitWriter}
 
   // ------------------------------------------------- T.4 run-length codes
 
@@ -102,34 +103,17 @@ object CcittG4 {
 
   // ------------------------------------------------------------- encoding
 
-  private final class BitOut {
-    private val buf = new java.io.ByteArrayOutputStream()
-    private var acc = 0
-    private var n = 0
-    def put(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((code >> i) & 1)
-        n += 1
-        if (n == 8) { buf.write(acc & 0xff); acc = 0; n = 0 }
-        i -= 1
-      }
-    }
-    def alignByte(): Unit = if (n > 0) { acc <<= (8 - n); buf.write(acc & 0xff); acc = 0; n = 0 }
-    def result(): Array[Byte] = { alignByte(); buf.toByteArray }
-  }
-
-  private def putRun(out: BitOut, run0: Int, black: Boolean): Unit = {
+  private def putRun(out: MsbBitWriter, run0: Int, black: Boolean): Unit = {
     var run = run0
     val enc = if (black) blackEnc else whiteEnc
     while (run >= 64) {
       val slot = math.min((run / 64) * 64, 2560)
       val e = enc.get(slot)
-      out.put(e & 0xffff, e >>> 16)
+      out.bits(e & 0xffff, e >>> 16)
       run -= slot
     }
     val e = enc.get(run)
-    out.put(e & 0xffff, e >>> 16)
+    out.bits(e & 0xffff, e >>> 16)
   }
 
   /** Transition positions of a line (positions where color changes,
@@ -152,7 +136,7 @@ object CcittG4 {
   /** Encode `pixels` (w*h bytes, 0 white / 1 black). */
   def encode(pixels: Array[Byte], width: Int, height: Int, byteAlign: Boolean = false): Array[Byte] = {
     require(width > 0 && height >= 0 && pixels.length == width * height, "bad image shape")
-    val out = new BitOut
+    val out = new MsbBitWriter
     var ref = Array(width, width) // imaginary all-white reference line
     var y = 0
     while (y < height) {
@@ -173,24 +157,24 @@ object CcittG4 {
         val b1 = if (k < ref.length) math.max(ref(math.min(k, ref.length - 1)), 0) else width
         val b2 = if (k + 1 < ref.length) ref(k + 1) else width
         if (b2 < a1) {
-          out.put(0x1, 4) // pass: 0001
+          out.bits(0x1, 4) // pass: 0001
           a0 = b2
         } else if (math.abs(a1 - b1) <= 3) {
           (a1 - b1) match {
-            case 0 => out.put(0x1, 1)
-            case 1 => out.put(0x3, 3) // 011
-            case 2 => out.put(0x03, 6) // 000011
-            case 3 => out.put(0x03, 7) // 0000011
-            case -1 => out.put(0x2, 3) // 010
-            case -2 => out.put(0x02, 6) // 000010
-            case _ => out.put(0x02, 7) // 0000010
+            case 0 => out.bits(0x1, 1)
+            case 1 => out.bits(0x3, 3) // 011
+            case 2 => out.bits(0x03, 6) // 000011
+            case 3 => out.bits(0x03, 7) // 0000011
+            case -1 => out.bits(0x2, 3) // 010
+            case -2 => out.bits(0x02, 6) // 000010
+            case _ => out.bits(0x02, 7) // 0000010
           }
           a0 = a1; color ^= 1
           ci += 1
         } else {
           // horizontal: 001 + run(color, a0a1) + run(!color, a1a2)
           val a2 = if (ci + 1 < cur.length) cur(ci + 1) else width
-          out.put(0x1, 3)
+          out.bits(0x1, 3)
           val r1 = if (a0 < 0) a1 else a1 - a0
           val r2 = a2 - a1
           putRun(out, r1, color == 1)
@@ -199,7 +183,7 @@ object CcittG4 {
           ci += 2
         }
       }
-      if (byteAlign) out.alignByte()
+      if (byteAlign) out.align()
       ref = cur
       y += 1
     }
@@ -219,16 +203,7 @@ object CcittG4 {
     if (data == null) return Left("ccitt: null input")
     if (width <= 0 || height < 0) return Left("ccitt: bad dims")
     val out = new Array[Byte](width * height)
-    var bitPos = 0
-    val nBits = data.length * 8
-    def readBit(): Int = {
-      if (bitPos >= nBits) -1
-      else {
-        val v = (data(bitPos >> 3) >> (7 - (bitPos & 7))) & 1
-        bitPos += 1
-        v
-      }
-    }
+    val in = new MsbBitReader(data, 0, data.length)
     def decodeRun(black: Boolean): Int = {
       val m = if (black) blackMap else whiteMap
       var total = 0
@@ -237,7 +212,7 @@ object CcittG4 {
         var code = 0; var len = 0
         var run = -1
         while (run < 0 && len < 14) {
-          val b = readBit()
+          val b = in.bits(1)
           if (b < 0) return -1
           code = (code << 1) | b
           len += 1
@@ -266,7 +241,7 @@ object CcittG4 {
         var zeros = 0
         var done = false
         while (!done) {
-          val b = readBit()
+          val b = in.bits(1)
           if (b < 0) { fail = true; done = true }
           else if (b == 1) {
             mode = zeros match {
@@ -283,11 +258,11 @@ object CcittG4 {
         }
         if (!fail) mode match {
           case -2 => // 01b: b=1 -> VR1 (011), b=0 -> VL1 (010)
-            val b = readBit(); if (b < 0) fail = true else mode = if (b == 1) 1 else 4
+            val b = in.bits(1); if (b < 0) fail = true else mode = if (b == 1) 1 else 4
           case -3 =>
-            val b = readBit(); if (b < 0) fail = true else mode = if (b == 1) 2 else 5
+            val b = in.bits(1); if (b < 0) fail = true else mode = if (b == 1) 2 else 5
           case -4 =>
-            val b = readBit(); if (b < 0) fail = true else mode = if (b == 1) 3 else 6
+            val b = in.bits(1); if (b < 0) fail = true else mode = if (b == 1) 3 else 6
           case -5 =>
             // >=6 leading zeros then 1: EOL/EOFB -> treat as premature end
             return Left(s"ccitt: unexpected EOL/EOFB at line $y")
@@ -347,7 +322,7 @@ object CcittG4 {
       // mode can emit a transition at `width` followed by none — pad
       cur(cn) = width; cur(cn + 1) = width
       ref = java.util.Arrays.copyOf(cur, cn + 2)
-      if (byteAlign) bitPos = (bitPos + 7) & ~7
+      if (byteAlign) in.align()
       y += 1
     }
     Right(out)

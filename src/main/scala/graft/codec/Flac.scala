@@ -120,23 +120,22 @@ object Flac {
   * count, then count x (LE length, "KEY=value" UTF-8). Keys are
   * case-insensitive per spec — normalized to upper case here. */
 object VorbisComment {
-  private def le32(b: Array[Byte], p: Int): Int =
-    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) | ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
+  import Bytes.{le, le32}
 
   def parse(b: Array[Byte], off: Int, end: Int): Either[String, Map[String, String]] = {
     if (off + 4 > end) return Left("vorbis comment: truncated vendor length")
-    val vlen = le32(b, off)
+    val vlen = le32(b, off).toInt
     if (vlen < 0 || vlen > end - off - 4) return Left("vorbis comment: bad vendor length")
     var p = off + 4 + vlen
     if (p + 4 > end) return Left("vorbis comment: truncated count")
-    val n = le32(b, p)
+    val n = le32(b, p).toInt
     p += 4
     if (n < 0 || n > 65536) return Left("vorbis comment: implausible count")
     val tags = scala.collection.mutable.Map.empty[String, String]
     var i = 0
     while (i < n) {
       if (p + 4 > end) return Left("vorbis comment: truncated entry length")
-      val len = le32(b, p)
+      val len = le32(b, p).toInt
       p += 4
       if (len < 0 || len > end - p) return Left("vorbis comment: entry overruns")
       val s = new String(b, p, len, "UTF-8")
@@ -153,13 +152,12 @@ object VorbisComment {
 
   def build(vendor: String, tags: Seq[(String, String)]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def le(v: Int): Unit = (0 until 4).foreach(k => out.write((v >> (8 * k)) & 0xff))
     val vb = vendor.getBytes("UTF-8")
-    le(vb.length); out.write(vb, 0, vb.length)
-    le(tags.length)
+    le(out, vb.length, 4); out.write(vb, 0, vb.length)
+    le(out, tags.length, 4)
     tags.foreach { case (k, v) =>
       val e = (k + "=" + v).getBytes("UTF-8")
-      le(e.length); out.write(e, 0, e.length)
+      le(out, e.length, 4); out.write(e, 0, e.length)
     }
     out.toByteArray
   }

@@ -19,6 +19,7 @@ package graft.codec
   * round-trips are bit-exact.
   */
 object Gif {
+  import Bytes.{LsbBitReader, LsbBitWriter, le, le16}
 
   def isGif(b: Array[Byte]): Boolean =
     b != null && b.length >= 6 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' &&
@@ -28,12 +29,10 @@ object Gif {
     try decodeImpl(b)
     catch { case e: Exception => Left(s"gif: ${e.getClass.getSimpleName}: ${e.getMessage}") }
 
-  private def u16(b: Array[Byte], p: Int): Int = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-
   private def decodeImpl(b: Array[Byte]): Either[String, Jpeg.Image] = {
     if (!isGif(b)) return Left("gif: bad signature")
     if (b.length < 13) return Left("gif: truncated header")
-    val sw = u16(b, 6); val sh = u16(b, 8)
+    val sw = le16(b, 6); val sh = le16(b, 8)
     if (sw <= 0 || sh <= 0) return Left("gif: bad screen size")
     val flags = b(10) & 0xff
     var p = 13
@@ -53,7 +52,7 @@ object Gif {
           p += 1
         case 0x2c => // image descriptor
           if (p + 10 > b.length) return Left("gif: truncated image descriptor")
-          val iw = u16(b, p + 5); val ih = u16(b, p + 7)
+          val iw = le16(b, p + 5); val ih = le16(b, p + 7)
           val iflags = b(p + 9) & 0xff
           val interlaced = (iflags & 0x40) != 0
           p += 10
@@ -131,23 +130,11 @@ object Gif {
     var codeWidth = 0
     def reset(): Unit = { dictSize = endCode + 1; codeWidth = minCode + 1 }
     reset()
-    var bitPos = 0
-    val nBits = data.length * 8
-    def readCode(): Int = {
-      if (bitPos + codeWidth > nBits) return -1
-      var v = 0; var i = 0
-      while (i < codeWidth) {
-        val bp = bitPos + i
-        v |= ((data(bp >> 3) >> (bp & 7)) & 1) << i
-        i += 1
-      }
-      bitPos += codeWidth
-      v
-    }
+    val r = new LsbBitReader(data, 0, data.length)
     val stack = new Array[Byte](4096)
     var prev = -1
     while (outPos < nPixels) {
-      val code = readCode()
+      val code = r.bits(codeWidth)
       if (code < 0) return Left("gif: LZW stream truncated")
       if (code == clearCode) { reset(); prev = -1 }
       else if (code == endCode) {
@@ -204,13 +191,12 @@ object Gif {
     val minCode = math.max(2, colorBits)
     val out = new java.io.ByteArrayOutputStream(indices.length / 2 + 64)
     out.write("GIF87a".getBytes("US-ASCII"))
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    le16(width); le16(height)
+    le(out, width, 2); le(out, height, 2)
     out.write(0x80 | (colorBits - 1 max 0)) // GCT present, size bits
     out.write(0); out.write(0)
     out.write(palette, 0, palette.length)
     out.write(0x2c) // image descriptor
-    le16(0); le16(0); le16(width); le16(height)
+    le(out, 0, 2); le(out, 0, 2); le(out, width, 2); le(out, height, 2)
     out.write(0) // no LCT, not interlaced
     out.write(minCode)
     writeLzwBlocks(out, indices, minCode)
@@ -227,14 +213,8 @@ object Gif {
     val dict = new java.util.HashMap[Integer, Integer]() // (prev<<8|byte) -> code
     var dictSize = endCode + 1
     var codeWidth = minCode + 1
-    val bits = new java.io.ByteArrayOutputStream()
-    var acc = 0L; var accN = 0
-    def putCode(c: Int): Unit = {
-      acc |= c.toLong << accN
-      accN += codeWidth
-      while (accN >= 8) { bits.write((acc & 0xff).toInt); acc >>>= 8; accN -= 8 }
-    }
-    putCode(clearCode)
+    val codes = new LsbBitWriter
+    codes.bits(clearCode, codeWidth)
     var prev = indices(0) & 0xff
     var i = 1
     while (i < indices.length) {
@@ -243,13 +223,13 @@ object Gif {
       val hit = dict.get(key)
       if (hit != null) prev = hit.intValue()
       else {
-        putCode(prev)
+        codes.bits(prev, codeWidth)
         if (dictSize < 4096) {
           dict.put(key, dictSize)
           if (dictSize == (1 << codeWidth) && codeWidth < 12) codeWidth += 1
           dictSize += 1
         } else {
-          putCode(clearCode)
+          codes.bits(clearCode, codeWidth)
           dict.clear()
           dictSize = endCode + 1
           codeWidth = minCode + 1
@@ -258,10 +238,9 @@ object Gif {
       }
       i += 1
     }
-    putCode(prev)
-    putCode(endCode)
-    if (accN > 0) bits.write((acc & 0xff).toInt)
-    val z = bits.toByteArray
+    codes.bits(prev, codeWidth)
+    codes.bits(endCode, codeWidth)
+    val z = codes.result()
     var off = 0
     while (off < z.length) {
       val n = math.min(255, z.length - off)
@@ -304,7 +283,7 @@ object Gif {
   private def decodeFramesImpl(b: Array[Byte], maxFrames: Int): Either[String, Anim] = {
     if (!isGif(b)) return Left("gif: bad signature")
     if (b.length < 13) return Left("gif: truncated header")
-    val sw = u16(b, 6); val sh = u16(b, 8)
+    val sw = le16(b, 6); val sh = le16(b, 8)
     if (sw <= 0 || sh <= 0 || sw.toLong * sh > (1L << 28) / 4) return Left("gif: bad screen size")
     val flags = b(10) & 0xff
     var p = 13
@@ -337,7 +316,7 @@ object Gif {
           if (label == 0xf9 && p + 7 < b.length && (b(p + 2) & 0xff) >= 4) {
             val packed = b(p + 3) & 0xff
             disposal = (packed >> 2) & 7
-            delayCs = u16(b, p + 4)
+            delayCs = le16(b, p + 4)
             transIdx = if ((packed & 1) != 0) b(p + 6) & 0xff else -1
           } else if (label == 0xff && p + 2 < b.length && (b(p + 2) & 0xff) == 11 &&
             p + 14 <= b.length &&
@@ -345,7 +324,7 @@ object Gif {
             // NETSCAPE2.0 app extension: sub-block (1, loop lo, loop hi)
             val q = p + 14
             if (q + 4 <= b.length && (b(q) & 0xff) >= 3 && (b(q + 1) & 0xff) == 1)
-              loop = u16(b, q + 2)
+              loop = le16(b, q + 2)
           }
           p += 2
           while (p < b.length && (b(p) & 0xff) != 0) p += 1 + (b(p) & 0xff)
@@ -353,8 +332,8 @@ object Gif {
         case 0x2c =>
           if (n >= maxFrames) return Left("gif: too many frames")
           if (p + 10 > b.length) return Left("gif: truncated image descriptor")
-          val left = u16(b, p + 1); val top = u16(b, p + 3)
-          val iw = u16(b, p + 5); val ih = u16(b, p + 7)
+          val left = le16(b, p + 1); val top = le16(b, p + 3)
+          val iw = le16(b, p + 5); val ih = le16(b, p + 7)
           val iflags = b(p + 9) & 0xff
           val interlaced = (iflags & 0x40) != 0
           p += 10
@@ -452,15 +431,14 @@ object Gif {
     val minCode = math.max(2, colorBits)
     val out = new java.io.ByteArrayOutputStream()
     out.write("GIF89a".getBytes("US-ASCII"))
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    le16(screenW); le16(screenH)
+    le(out, screenW, 2); le(out, screenH, 2)
     out.write(0x80 | (colorBits - 1 max 0))
     out.write(0); out.write(0)
     out.write(palette, 0, palette.length)
     // NETSCAPE2.0 loop extension
     out.write(0x21); out.write(0xff); out.write(11)
     out.write("NETSCAPE2.0".getBytes("US-ASCII"))
-    out.write(3); out.write(1); le16(loop); out.write(0)
+    out.write(3); out.write(1); le(out, loop, 2); out.write(0)
     for (f <- frames) {
       require(f.indices.length == f.width * f.height, "bad frame shape")
       require(f.left >= 0 && f.top >= 0 && f.left + f.width <= screenW &&
@@ -468,12 +446,12 @@ object Gif {
       // graphic control extension
       out.write(0x21); out.write(0xf9); out.write(4)
       out.write(((f.disposal & 7) << 2) | (if (f.transIdx >= 0) 1 else 0))
-      le16(f.delayCs)
+      le(out, f.delayCs, 2)
       out.write(if (f.transIdx >= 0) f.transIdx else 0)
       out.write(0)
       // image descriptor + data
       out.write(0x2c)
-      le16(f.left); le16(f.top); le16(f.width); le16(f.height)
+      le(out, f.left, 2); le(out, f.top, 2); le(out, f.width, 2); le(out, f.height, 2)
       out.write(0)
       out.write(minCode)
       writeLzwBlocks(out, f.indices, minCode)

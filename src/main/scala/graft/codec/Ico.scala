@@ -9,6 +9,7 @@ package graft.codec
   * doubled-height DIB layout adds little over the BMP support and
   * modern favicons are PNG). */
 object Ico {
+  import Bytes.{be32, le, le16, le32}
 
   final case class Entry(width: Int, height: Int, bpp: Int, isPng: Boolean,
       offset: Int, size: Int)
@@ -18,12 +19,8 @@ object Ico {
   def isIco(b: Array[Byte]): Boolean =
     b != null && b.length >= 6 &&
       b(0) == 0 && b(1) == 0 && (b(2) == 1 || b(2) == 2) && b(3) == 0 &&
-      ((b(4) & 0xff) | ((b(5) & 0xff) << 8)) > 0 &&
-      ((b(4) & 0xff) | ((b(5) & 0xff) << 8)) <= 64
+      le16(b, 4) > 0 && le16(b, 4) <= 64
 
-  private def le16(b: Array[Byte], p: Int): Int = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], p: Int): Long =
-    le16(b, p).toLong | (le16(b, p + 2).toLong << 16)
 
   def info(b: Array[Byte]): Either[String, Info] =
     try infoImpl(b)
@@ -50,10 +47,7 @@ object Ico {
       // cap at 255 and use 0-means-256); DIB entries use the directory
       val (w, h) =
         if (isPng && size >= 24)
-          ((((b(o + 16) & 0xff) << 24) | ((b(o + 17) & 0xff) << 16) |
-            ((b(o + 18) & 0xff) << 8) | (b(o + 19) & 0xff)),
-            (((b(o + 20) & 0xff) << 24) | ((b(o + 21) & 0xff) << 16) |
-              ((b(o + 22) & 0xff) << 8) | (b(o + 23) & 0xff)))
+          (be32(b, o + 16).toInt, be32(b, o + 20).toInt)
         else (if (w0 == 0) 256 else w0, if (h0 == 0) 256 else h0)
       entries += Entry(w, h, bpp, isPng, o, size.toInt)
       i += 1
@@ -78,15 +72,13 @@ object Ico {
     // frames: (pngBytes, width, height, bpp)
     require(frames.nonEmpty && frames.length <= 64)
     val out = new java.io.ByteArrayOutputStream()
-    def le16w(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32w(v: Int): Unit = { le16w(v & 0xffff); le16w((v >>> 16) & 0xffff) }
-    le16w(0); le16w(if (kind == "cursor") 2 else 1); le16w(frames.length)
+    le(out, 0, 2); le(out, if (kind == "cursor") 2 else 1, 2); le(out, frames.length, 2)
     var off = 6 + 16 * frames.length
     frames.foreach { case (png, w, h, bpp) =>
       out.write(if (w >= 256) 0 else w); out.write(if (h >= 256) 0 else h)
       out.write(0); out.write(0)
-      le16w(1); le16w(bpp)
-      le32w(png.length); le32w(off)
+      le(out, 1, 2); le(out, bpp, 2)
+      le(out, png.length, 4); le(out, off, 4)
       off += png.length
     }
     frames.foreach { case (png, _, _, _) => out.write(png, 0, png.length) }

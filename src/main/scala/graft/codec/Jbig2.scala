@@ -55,6 +55,7 @@ package graft.codec
   * this turns them into pixels).
   */
 object Jbig2 {
+  import Bytes.{MsbBitReader, MsbBitWriter, be, be16, be32}
 
   // ------------------------------------------------------------ MQ coder
 
@@ -461,23 +462,23 @@ object Jbig2 {
         len += 1
       }
     }
-    /** Right(None) = OOB. */
-    def decode(r: HuffReader): Either[String, Option[Int]] = {
+    /** Right(None) = OOB; running out of data is a Left. */
+    def decode(r: MsbBitReader): Either[String, Option[Int]] = {
       var code = 0
       var len = 0
       while (len < 32) {
-        code = (code << 1) | r.bit()
+        val bit = r.bits(1)
+        if (bit < 0) return Left(TruncatedHuffman)
+        code = (code << 1) | bit
         len += 1
         var i = 0
         while (i < lines.length) {
           val l = lines(i)
           if (l.prefLen == len && codes(i) == code) {
-            return l.kind match {
-              case 0 => Right(Some(l.rangeLow + r.bits(l.rangeLen)))
-              case 1 => Right(Some(l.rangeLow - r.bits(32)))
-              case 2 => Right(Some(l.rangeLow + r.bits(32)))
-              case _ => Right(None)
-            }
+            if (l.kind == 3) return Right(None)
+            val v = if (l.kind == 0) r.bits(l.rangeLen).toLong else bits32(r)
+            if (v < 0) return Left(TruncatedHuffman)
+            return Right(Some(if (l.kind == 1) l.rangeLow - v.toInt else l.rangeLow + v.toInt))
           }
           i += 1
         }
@@ -485,11 +486,11 @@ object Jbig2 {
       Left("jbig2: invalid huffman code")
     }
     /** Encoder side: emit `value` (or OOB for None) through `w`. */
-    def encode(w: HuffWriter, value: Option[Int]): Unit = value match {
+    def encode(w: MsbBitWriter, value: Option[Int]): Unit = value match {
       case None =>
         val i = lines.indexWhere(_.kind == 3)
         require(i >= 0, "table has no OOB")
-        w.putBits(codes(i), lines(i).prefLen)
+        w.bits(codes(i), lines(i).prefLen)
       case Some(v) =>
         // choose the matching line: normal ranges first, then lower/upper
         var best = -1
@@ -512,52 +513,22 @@ object Jbig2 {
         }
         require(best >= 0, s"value $v not representable")
         val l = lines(best)
-        w.putBits(codes(best), l.prefLen)
+        w.bits(codes(best), l.prefLen)
         l.kind match {
-          case 0 => w.putBits(v - l.rangeLow, l.rangeLen)
-          case 1 => w.putBits(l.rangeLow - v, 32)
-          case _ => w.putBits(v - l.rangeLow, 32)
+          case 0 => w.bits(v - l.rangeLow, l.rangeLen)
+          case 1 => w.bits(l.rangeLow - v, 32)
+          case _ => w.bits(v - l.rangeLow, 32)
         }
     }
   }
 
-  /** MSB-first bit reader over a byte slice. */
-  private final class HuffReader(b: Array[Byte], val start: Int, val end: Int) {
-    var pos: Int = start
-    var bitPos: Int = 0
-    def bit(): Int = {
-      val v = if (pos < end) (b(pos) >> (7 - bitPos)) & 1 else 0
-      bitPos += 1
-      if (bitPos == 8) { bitPos = 0; pos += 1 }
-      v
-    }
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    def align(): Unit = if (bitPos != 0) { bitPos = 0; pos += 1 }
-    def exhausted: Boolean = pos >= end
-  }
+  private val TruncatedHuffman = "jbig2: truncated huffman data"
 
-  /** MSB-first bit writer. */
-  private final class HuffWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nBits = 0
-    def putBit(v: Int): Unit = {
-      cur = (cur << 1) | (v & 1)
-      nBits += 1
-      if (nBits == 8) { out.write(cur); cur = 0; nBits = 0 }
-    }
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { putBit((v >> i) & 1); i -= 1 }
-    }
-    def align(): Unit = while (nBits != 0) putBit(0)
-    def writeBytes(bytes: Array[Byte]): Unit = { align(); out.write(bytes, 0, bytes.length) }
-    def result(): Array[Byte] = { align(); out.toByteArray }
+  /** 32 raw bits as an unsigned value; -1 when fewer remain. */
+  private def bits32(r: MsbBitReader): Long = {
+    val hi = r.bits(16)
+    val lo = r.bits(16)
+    if (hi < 0 || lo < 0) -1L else (hi.toLong << 16) | lo
   }
 
   /** T.88 Annex B standard tables B.1-B.5. Their published prefix-length
@@ -614,23 +585,27 @@ object Jbig2 {
     val low = be32(b, off + 1).toInt
     val high = be32(b, off + 5).toInt
     if (low >= high) return Left("jbig2: bad table range")
-    val r = new HuffReader(b, off + 9, end)
+    val r = new MsbBitReader(b, off + 9, end)
     val lines = scala.collection.mutable.ArrayBuffer.empty[HuffLine]
     var cur = low
     var guard = 0
     while (cur < high) {
       val pl = r.bits(htps)
       val rl = r.bits(htrs)
+      if (pl < 0 || rl < 0) return Left("jbig2: truncated table segment")
       if (rl > 31) return Left("jbig2: bad table range length")
       lines += HuffLine(pl, rl, cur)
       cur = math.toIntExact(cur.toLong + (1L << rl))
       guard += 1
       if (guard > 4096) return Left("jbig2: implausible table size")
     }
-    lines += HuffLine(r.bits(htps), 0, low - 1, kind = 1)
-    lines += HuffLine(r.bits(htps), 0, high, kind = 2)
-    if (htoob) lines += HuffLine(r.bits(htps), 0, 0, kind = 3)
-    if (r.pos > end) return Left("jbig2: truncated table segment")
+    val lowerLen = r.bits(htps)
+    val upperLen = r.bits(htps)
+    val oobLen = if (htoob) r.bits(htps) else 0
+    if (lowerLen < 0 || upperLen < 0 || oobLen < 0) return Left("jbig2: truncated table segment")
+    lines += HuffLine(lowerLen, 0, low - 1, kind = 1)
+    lines += HuffLine(upperLen, 0, high, kind = 2)
+    if (htoob) lines += HuffLine(oobLen, 0, 0, kind = 3)
     Right(new HuffTable(lines.toArray))
   }
 
@@ -645,7 +620,7 @@ object Jbig2 {
       inputSyms: Vector[SymBitmap],
       customTables: Vector[HuffTable]): Either[String, Vector[SymBitmap]] = {
     if (off + 12 > end) return Left("jbig2: short symbol dict")
-    val flags = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
+    val flags = be16(b, off)
     val sdhuff = (flags & 1) != 0
     val sdrefagg = (flags & 2) != 0
     val template = (flags >> 10) & 3
@@ -754,7 +729,7 @@ object Jbig2 {
     q += 8
     if (numNew < 0 || numNew > 100000 || numEx < 0 || numEx > 100000)
       return Left("jbig2: implausible symbol counts")
-    val r = new HuffReader(b, q, end)
+    val r = new MsbBitReader(b, q, end)
     val newSyms = Vector.newBuilder[SymBitmap]
     var decoded = 0
     var height = 0
@@ -869,7 +844,7 @@ object Jbig2 {
       rw: Int, rh: Int, syms: Vector[SymBitmap],
       customTables: Vector[HuffTable]): Either[String, Array[Byte]] = {
     if (off + 4 > end) return Left("jbig2: short text region")
-    val flags = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
+    val flags = be16(b, off)
     val sbhuff = (flags & 1) != 0
     val refine = (flags & 2) != 0
     val logStrips = (flags >> 2) & 3
@@ -967,7 +942,7 @@ object Jbig2 {
       rw: Int, rh: Int, syms: Vector[SymBitmap], customTables: Vector[HuffTable],
       logStrips: Int, refCorner: Int, dsOffset: Int): Either[String, Array[Byte]] = {
     if (off + 6 > end) return Left("jbig2: short text region")
-    val hf = ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
+    val hf = be16(b, off)
     val fsSel = hf & 3
     val dsSel = (hf >> 2) & 3
     val dtSel = (hf >> 4) & 3
@@ -991,9 +966,10 @@ object Jbig2 {
     val numInstances = be32(b, off + 2).toInt
     if (numInstances < 0 || numInstances > (1 << 24)) return Left("jbig2: bad instance count")
     val strips = 1 << logStrips
-    val r = new HuffReader(b, off + 6, end)
+    val r = new MsbBitReader(b, off + 6, end)
     // ---- symbol-ID code table (7.4.3.1.7) ----
     val runLens = Array.fill(35)(r.bits(5))
+    if (runLens.contains(-1)) return Left(TruncatedHuffman)
     val runTable = new HuffTable(Array.tabulate(35)(i => HuffLine(runLens(i), 0, i)))
     val symLens = new Array[Int](syms.length)
     var si = 0
@@ -1003,14 +979,17 @@ object Jbig2 {
         case Right(Some(code)) if code <= 31 => symLens(si) = code; prev = code; si += 1
         case Right(Some(32)) =>
           val rep = 3 + r.bits(2)
+          if (rep < 3) return Left(TruncatedHuffman)
           if (si + rep > syms.length) return Left("jbig2: symbol code repeat overrun")
           (0 until rep).foreach { _ => symLens(si) = prev; si += 1 }
         case Right(Some(33)) =>
           val rep = 3 + r.bits(3)
+          if (rep < 3) return Left(TruncatedHuffman)
           if (si + rep > syms.length) return Left("jbig2: symbol code repeat overrun")
           (0 until rep).foreach { _ => symLens(si) = 0; si += 1 }
         case Right(Some(34)) =>
           val rep = 11 + r.bits(7)
+          if (rep < 11) return Left(TruncatedHuffman)
           if (si + rep > syms.length) return Left("jbig2: symbol code repeat overrun")
           (0 until rep).foreach { _ => symLens(si) = 0; si += 1 }
         case _ => return Left("jbig2: bad symbol code length")
@@ -1056,6 +1035,7 @@ object Jbig2 {
         }
         if (!stripDone) {
           val curT = if (strips == 1) 0 else r.bits(logStrips)
+          if (curT < 0) return Left(TruncatedHuffman)
           val t = stripT + curT
           val id = symTable.decode(r) match {
             case Right(Some(v)) => v
@@ -1093,10 +1073,6 @@ object Jbig2 {
   // ------------------------------------------------------------ segments
 
   private val MaxPixels = (1L << 28) / 4
-
-  private def be32(b: Array[Byte], p: Int): Long =
-    ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |
-      ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
 
   /** Decode an EMBEDDED JBIG2 stream (PDF /JBIG2Decode payload, with the
     * /JBIG2Globals stream, if any, simply prepended — globals carry no
@@ -1138,7 +1114,7 @@ object Jbig2 {
       while (rr < refCount) {
         referred(rr) = refSize match {
           case 1 => (b(q) & 0xffL)
-          case 2 => ((b(q) & 0xffL) << 8) | (b(q + 1) & 0xffL)
+          case 2 => be16(b, q).toLong
           case _ => be32(b, q)
         }
         q += refSize
@@ -1293,22 +1269,14 @@ object Jbig2 {
     require(template >= 0 && template <= 3, "bad template")
     val norm = bitmap.map(v => (if (v != 0) 1 else 0).toByte)
     val out = new java.io.ByteArrayOutputStream()
-    def be(v: Long, n: Int): Unit = {
-      var k = n - 1
-      while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-    }
     // page info segment (#1, type 48, page 1)
-    be(1, 4); out.write(48); out.write(0); out.write(1)
-    be(19, 4)
-    be(w, 4); be(h, 4); be(0, 4); be(0, 4); out.write(0); be(0, 2)
+    be(out, 1, 4); out.write(48); out.write(0); out.write(1)
+    be(out, 19, 4)
+    be(out, w, 4); be(out, h, 4); be(out, 0, 4); be(out, 0, 4); out.write(0); be(out, 0, 2)
     // immediate lossless generic region (#2, type 39, page 1)
     val payload = {
       val body = new java.io.ByteArrayOutputStream()
-      def bbe(v: Long, n: Int): Unit = {
-        var k = n - 1
-        while (k >= 0) { body.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-      }
-      bbe(w, 4); bbe(h, 4); bbe(0, 4); bbe(0, 4); body.write(0) // region info, OR
+      be(body, w, 4); be(body, h, 4); be(body, 0, 4); be(body, 0, 4); body.write(0) // region info, OR
       val gFlags = (if (mmr) 1 else 0) | (template << 1) | (if (tpgdon) 8 else 0)
       body.write(gFlags)
       if (!mmr) {
@@ -1319,11 +1287,11 @@ object Jbig2 {
       }
       body.toByteArray
     }
-    be(2, 4); out.write(39); out.write(0); out.write(1)
-    be(payload.length, 4)
+    be(out, 2, 4); out.write(39); out.write(0); out.write(1)
+    be(out, payload.length, 4)
     out.write(payload, 0, payload.length)
     // end of page (#3, type 49)
-    be(3, 4); out.write(49); out.write(0); out.write(1); be(0, 4)
+    be(out, 3, 4); out.write(49); out.write(0); out.write(1); be(out, 0, 4)
     out.toByteArray
   }
 
@@ -1351,14 +1319,10 @@ object Jbig2 {
     // ---- symbol dictionary data
     val dictBody = {
       val out = new java.io.ByteArrayOutputStream()
-      def be(v: Long, n: Int): Unit = {
-        var k = n - 1
-        while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-      }
-      be(template << 10, 2) // flags: arith, no refagg
+      be(out, template << 10, 2) // flags: arith, no refagg
       NominalAt(template).foreach { case (x, y) => out.write(x & 0xff); out.write(y & 0xff) }
-      be(sorted.length, 4) // SDNUMEXSYMS
-      be(sorted.length, 4) // SDNUMNEWSYMS
+      be(out, sorted.length, 4) // SDNUMEXSYMS
+      be(out, sorted.length, 4) // SDNUMNEWSYMS
       val enc = new MQEncoder
       val iadh = new IntCtx; val iadw = new IntCtx; val iaex = new IntCtx
       val gix = new Array[Int](genericCtxSize(template))
@@ -1389,13 +1353,9 @@ object Jbig2 {
     // ---- text region data
     val textBody = {
       val out = new java.io.ByteArrayOutputStream()
-      def be(v: Long, n: Int): Unit = {
-        var k = n - 1
-        while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-      }
-      be(w, 4); be(h, 4); be(0, 4); be(0, 4); out.write(0) // region info, OR
-      be(1 << 4, 2) // flags: TOPLEFT, strips=1, arith, no refine/transpose
-      be(placements.length, 4)
+      be(out, w, 4); be(out, h, 4); be(out, 0, 4); be(out, 0, 4); out.write(0) // region info, OR
+      be(out, 1 << 4, 2) // flags: TOPLEFT, strips=1, arith, no refine/transpose
+      be(out, placements.length, 4)
       var symCodeLen = 32 - Integer.numberOfLeadingZeros(math.max(1, sorted.length - 1))
       if ((1 << symCodeLen) < sorted.length) symCodeLen += 1
       if (symCodeLen == 0) symCodeLen = 1
@@ -1434,21 +1394,17 @@ object Jbig2 {
 
     // ---- segments
     val out = new java.io.ByteArrayOutputStream()
-    def be(v: Long, n: Int): Unit = {
-      var k = n - 1
-      while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-    }
     // page info (#1)
-    be(1, 4); out.write(48); out.write(0); out.write(1)
-    be(19, 4); be(w, 4); be(h, 4); be(0, 4); be(0, 4); out.write(0); be(0, 2)
+    be(out, 1, 4); out.write(48); out.write(0); out.write(1)
+    be(out, 19, 4); be(out, w, 4); be(out, h, 4); be(out, 0, 4); be(out, 0, 4); out.write(0); be(out, 0, 2)
     // symbol dictionary (#2)
-    be(2, 4); out.write(0); out.write(0); out.write(1)
-    be(dictBody.length, 4); out.write(dictBody, 0, dictBody.length)
+    be(out, 2, 4); out.write(0); out.write(0); out.write(1)
+    be(out, dictBody.length, 4); out.write(dictBody, 0, dictBody.length)
     // immediate text region (#3, refers to #2)
-    be(3, 4); out.write(6); out.write(1 << 5); out.write(2); out.write(1)
-    be(textBody.length, 4); out.write(textBody, 0, textBody.length)
+    be(out, 3, 4); out.write(6); out.write(1 << 5); out.write(2); out.write(1)
+    be(out, textBody.length, 4); out.write(textBody, 0, textBody.length)
     // end of page (#4)
-    be(4, 4); out.write(49); out.write(0); out.write(1); be(0, 4)
+    be(out, 4, 4); out.write(49); out.write(0); out.write(1); be(out, 0, 4)
     out.toByteArray
   }
 
@@ -1462,14 +1418,13 @@ object Jbig2 {
   private def customTableBytes(rangeLen: Int, oob: Boolean): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     out.write((if (oob) 1 else 0) | ((4 - 1) << 1) | ((6 - 1) << 4)) // HTPS=4, HTRS=6
-    def be32w(v: Int): Unit = (3 to 0 by -1).foreach(k => out.write((v >> (8 * k)) & 0xff))
-    be32w(0) // HTLOW
-    be32w(1 << rangeLen) // HTHIGH
-    val w = new HuffWriter
-    w.putBits(1, 4); w.putBits(rangeLen, 6) // the one normal line
-    w.putBits(2, 4) // lower-range prefix
-    w.putBits(if (oob) 3 else 2, 4) // upper-range prefix
-    if (oob) w.putBits(3, 4) // OOB prefix
+    be(out, 0, 4) // HTLOW
+    be(out, 1 << rangeLen, 4) // HTHIGH
+    val w = new MsbBitWriter
+    w.bits(1, 4); w.bits(rangeLen, 6) // the one normal line
+    w.bits(2, 4) // lower-range prefix
+    w.bits(if (oob) 3 else 2, 4) // upper-range prefix
+    if (oob) w.bits(3, 4) // OOB prefix
     val bits = w.result()
     out.write(bits, 0, bits.length)
     out.toByteArray
@@ -1504,14 +1459,10 @@ object Jbig2 {
     // ---- SDHUFF dictionary body
     val dictBody = {
       val out = new java.io.ByteArrayOutputStream()
-      def be(v: Long, n: Int): Unit = {
-        var k = n - 1
-        while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-      }
-      be(1, 2) // flags: SDHUFF=1, DH sel 0 (B.4), DW sel 0 (B.2), BMSIZE sel 0 (B.1)
-      be(sorted.length, 4)
-      be(sorted.length, 4)
-      val hw = new HuffWriter
+      be(out, 1, 2) // flags: SDHUFF=1, DH sel 0 (B.4), DW sel 0 (B.2), BMSIZE sel 0 (B.1)
+      be(out, sorted.length, 4)
+      be(out, sorted.length, 4)
+      val hw = new MsbBitWriter
       var height = 0
       var i = 0
       while (i < sorted.length) {
@@ -1559,11 +1510,11 @@ object Jbig2 {
             }
             y += 1
           }
-          hw.writeBytes(raw)
+          hw.bytes(raw)
         } else {
           val mmr = CcittG4.encode(coll, totW, classH)
           TableB1.encode(hw, Some(mmr.length))
-          hw.writeBytes(mmr)
+          hw.bytes(mmr)
         }
       }
       TableB1.encode(hw, Some(0)) // run of 0 non-exported
@@ -1580,13 +1531,9 @@ object Jbig2 {
     val (textBody, tableSegs) =
       if (!huffText) {
         val out = new java.io.ByteArrayOutputStream()
-        def be(v: Long, n: Int): Unit = {
-          var k = n - 1
-          while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-        }
-        be(w, 4); be(h, 4); be(0, 4); be(0, 4); out.write(0)
-        be(1 << 4, 2) // TOPLEFT, strips=1, arith
-        be(placements.length, 4)
+        be(out, w, 4); be(out, h, 4); be(out, 0, 4); be(out, 0, 4); out.write(0)
+        be(out, 1 << 4, 2) // TOPLEFT, strips=1, arith
+        be(out, placements.length, 4)
         var symCodeLen = 32 - Integer.numberOfLeadingZeros(math.max(1, sorted.length - 1))
         if ((1 << symCodeLen) < sorted.length) symCodeLen += 1
         if (symCodeLen == 0) symCodeLen = 1
@@ -1622,21 +1569,17 @@ object Jbig2 {
         val dsTab = customTableOf(dsLen, oob = true)
         val dtTab = customTableOf(dtLen, oob = false)
         val out = new java.io.ByteArrayOutputStream()
-        def be(v: Long, n: Int): Unit = {
-          var k = n - 1
-          while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-        }
-        be(w, 4); be(h, 4); be(0, 4); be(0, 4); out.write(0)
-        be((1 << 4) | 1, 2) // TOPLEFT, strips=1, SBHUFF=1
-        be(3 | (3 << 2) | (3 << 4), 2) // huffman flags: FS/DS/DT all custom
-        be(placements.length, 4)
+        be(out, w, 4); be(out, h, 4); be(out, 0, 4); be(out, 0, 4); out.write(0)
+        be(out, (1 << 4) | 1, 2) // TOPLEFT, strips=1, SBHUFF=1
+        be(out, 3 | (3 << 2) | (3 << 4), 2) // huffman flags: FS/DS/DT all custom
+        be(out, placements.length, 4)
         var symCodeLen = 32 - Integer.numberOfLeadingZeros(math.max(1, sorted.length - 1))
         if ((1 << symCodeLen) < sorted.length) symCodeLen += 1
         if (symCodeLen == 0) symCodeLen = 1
-        val hw = new HuffWriter
+        val hw = new MsbBitWriter
         // runcode table: only length symCodeLen used, 1-bit runcode "0"
-        (0 until 35).foreach(i => hw.putBits(if (i == symCodeLen) 1 else 0, 5))
-        (0 until sorted.length).foreach(_ => hw.putBit(0)) // every symbol: that runcode
+        (0 until 35).foreach(i => hw.bits(if (i == symCodeLen) 1 else 0, 5))
+        (0 until sorted.length).foreach(_ => hw.bits(0, 1)) // every symbol: that runcode
         hw.align()
         dtTab.encode(hw, Some(0)) // STRIPT init
         val byStrip = placements.map { case (id, x, y) => (idMap(id), x, y) }
@@ -1655,7 +1598,7 @@ object Jbig2 {
             } else {
               dsTab.encode(hw, Some(x - curS)); curS = x
             }
-            hw.putBits(id, symCodeLen) // fixed-length canonical symbol code
+            hw.bits(id, symCodeLen) // fixed-length canonical symbol code
             curS += sorted(id)._1 - 1
           }
           dsTab.encode(hw, None)
@@ -1670,27 +1613,23 @@ object Jbig2 {
 
     // ---- segments
     val out = new java.io.ByteArrayOutputStream()
-    def be(v: Long, n: Int): Unit = {
-      var k = n - 1
-      while (k >= 0) { out.write(((v >> (8 * k)) & 0xff).toInt); k -= 1 }
-    }
-    be(1, 4); out.write(48); out.write(0); out.write(1)
-    be(19, 4); be(w, 4); be(h, 4); be(0, 4); be(0, 4); out.write(0); be(0, 2)
-    be(2, 4); out.write(0); out.write(0); out.write(1)
-    be(dictBody.length, 4); out.write(dictBody, 0, dictBody.length)
+    be(out, 1, 4); out.write(48); out.write(0); out.write(1)
+    be(out, 19, 4); be(out, w, 4); be(out, h, 4); be(out, 0, 4); be(out, 0, 4); out.write(0); be(out, 0, 2)
+    be(out, 2, 4); out.write(0); out.write(0); out.write(1)
+    be(out, dictBody.length, 4); out.write(dictBody, 0, dictBody.length)
     var segNum = 3
     tableSegs.foreach { tb =>
-      be(segNum, 4); out.write(53); out.write(0); out.write(1)
-      be(tb.length, 4); out.write(tb, 0, tb.length)
+      be(out, segNum, 4); out.write(53); out.write(0); out.write(1)
+      be(out, tb.length, 4); out.write(tb, 0, tb.length)
       segNum += 1
     }
     // immediate text region: refers to #2 (+ table segments in FS/DS/DT order)
     val refs = 2L +: (3L until segNum).toSeq
-    be(segNum, 4); out.write(6); out.write(refs.length << 5)
+    be(out, segNum, 4); out.write(6); out.write(refs.length << 5)
     refs.foreach(rn => out.write(rn.toInt))
     out.write(1)
-    be(textBody.length, 4); out.write(textBody, 0, textBody.length)
-    be(segNum + 1, 4); out.write(49); out.write(0); out.write(1); be(0, 4)
+    be(out, textBody.length, 4); out.write(textBody, 0, textBody.length)
+    be(out, segNum + 1, 4); out.write(49); out.write(0); out.write(1); be(out, 0, 4)
     out.toByteArray
   }
 }

@@ -48,6 +48,7 @@ package graft.codec
   *    division, so the replay is exact, not approximate.
   */
 object Jpeg {
+  import Bytes.{be16, u16, u32}
 
   /** Decoded image: `pixels` is w*h grayscale bytes (nComponents=1) or
     * w*h*3 interleaved RGB (nComponents=3). */
@@ -92,7 +93,7 @@ object Jpeg {
         out.write(b, p, b.length - p)
         return Right(out.toByteArray)
       }
-      val len = ((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff)
+      val len = be16(b, p + 2)
       if (len < 2 || p + 2 + len > b.length) return Left("jpeg: segment overruns file")
       val drop = m == 0xe1 || m == 0xed || m == 0xfe // APP1, APP13, COM
       if (!drop) out.write(b, p, 2 + len)
@@ -115,7 +116,7 @@ object Jpeg {
         if (m == 0xda || m == 0xd9) return None // into the scan: no EXIF
         if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) { p += 2 }
         else {
-          val len = u16(b, p + 2)
+          val len = be16(b, p + 2)
           if (len < 2 || p + 2 + len > b.length) return None
           if (m == 0xe1 && len >= 16 &&
               b(p + 4) == 'E' && b(p + 5) == 'x' && b(p + 6) == 'i' && b(p + 7) == 'f' &&
@@ -124,22 +125,16 @@ object Jpeg {
             val le = b(t) == 'I' && b(t + 1) == 'I'
             val be = b(t) == 'M' && b(t + 1) == 'M'
             if (!le && !be) return None
-            def r16(o: Int): Int =
-              if (le) (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-              else ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-            def r32(o: Int): Long =
-              if (le) r16(o).toLong | (r16(o + 2).toLong << 16)
-              else (r16(o).toLong << 16) | r16(o + 2).toLong
-            if (r16(t + 2) != 42) return None
-            val ifd = t + r32(t + 4).toInt
+            if (u16(b, t + 2, le) != 42) return None
+            val ifd = t + u32(b, t + 4, le).toInt
             if (ifd + 2 > p + 2 + len) return None
-            val n = r16(ifd)
+            val n = u16(b, ifd, le)
             var i = 0
             while (i < n) {
               val e = ifd + 2 + i * 12
               if (e + 12 > p + 2 + len) return None
-              if (r16(e) == 0x0112 && r16(e + 2) == 3) {
-                val v = r16(e + 8)
+              if (u16(b, e, le) == 0x0112 && u16(b, e + 2, le) == 3) {
+                val v = u16(b, e + 8, le)
                 return if (v >= 1 && v <= 8) Some(v) else None
               }
               i += 1
@@ -297,7 +292,6 @@ object Jpeg {
 
   // ---------------------------------------------------------------- decode
 
-  private def u16(b: Array[Byte], p: Int): Int = ((b(p) & 0xff) << 8) | (b(p + 1) & 0xff)
 
   private def decodeInternal(b: Array[Byte], headerOnly: Boolean): Either[String, Image] = {
     if (!isJpeg(b)) return Left("jpeg: bad SOI")
@@ -332,7 +326,7 @@ object Jpeg {
         case _ if m >= 0xd0 && m <= 0xd7 => () // stray RST
         case _ =>
           if (p + 2 > b.length) return Left("jpeg: truncated segment length")
-          val len = u16(b, p)
+          val len = be16(b, p)
           if (len < 2 || p + len > b.length) return Left("jpeg: bad segment length")
           val seg = p + 2; val segEnd = p + len
           m match {
@@ -368,7 +362,7 @@ object Jpeg {
               progressive = m == 0xc2
               val prec = b(seg) & 0xff
               if (prec != 8) return Left(s"jpeg: ${prec}-bit samples unsupported")
-              height = u16(b, seg + 1); width = u16(b, seg + 3)
+              height = be16(b, seg + 1); width = be16(b, seg + 3)
               if (height == 0) return Left("jpeg: DNL-deferred height unsupported")
               if (width == 0) return Left("jpeg: zero width")
               val nf = b(seg + 5) & 0xff
@@ -401,7 +395,7 @@ object Jpeg {
               return Left(f"jpeg: SOF$mm%02x (arithmetic/lossless/hierarchical) unsupported")
             case 0xcc => return Left("jpeg: arithmetic coding unsupported")
             case 0xdd => // DRI
-              restartInterval = u16(b, seg)
+              restartInterval = be16(b, seg)
             case 0xda => // SOS
               if (comps == null) return Left("jpeg: SOS before SOF")
               val ns = b(seg) & 0xff
@@ -758,54 +752,7 @@ object Jpeg {
       c.pred = 0
     }
 
-    // --- bit reader over the entropy segment (handles 0xFF00 stuffing)
-    var pos = start
-    var bitBuf = 0
-    var bitCnt = 0
-    var hitMarker = false // next marker reached (RST consumed separately)
-
-    def nextByte(): Int = {
-      if (pos >= b.length) { hitMarker = true; return -1 }
-      val v = b(pos) & 0xff
-      pos += 1
-      if (v == 0xff) {
-        if (pos >= b.length) { hitMarker = true; return -1 }
-        val f = b(pos) & 0xff
-        if (f == 0x00) { pos += 1; 0xff }
-        else { pos -= 1; hitMarker = true; -1 } // a real marker
-      } else v
-    }
-    def readBit(): Int = {
-      if (bitCnt == 0) {
-        val v = nextByte()
-        if (v < 0) return -1
-        bitBuf = v; bitCnt = 8
-      }
-      bitCnt -= 1
-      (bitBuf >> bitCnt) & 1
-    }
-    def receive(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { val bit = readBit(); if (bit < 0) return Int.MinValue; v = (v << 1) | bit; i += 1 }
-      v
-    }
-    // T.81 F.12 EXTEND
-    def extend(v: Int, t: Int): Int =
-      if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
-
-    def decodeHuff(h: Huff): Int = {
-      var code = readBit()
-      if (code < 0) return -1
-      var l = 1
-      while (l <= 16) {
-        if (h.maxCode(l) >= 0 && code <= h.maxCode(l)) return h.value(l, code)
-        val bit = readBit()
-        if (bit < 0) return -1
-        code = (code << 1) | bit
-        l += 1
-      }
-      -1
-    }
+    val in = new BitReader(b, start)
 
     val coef = new Array[Int](64)
     val blk = new Array[Int](64)
@@ -814,10 +761,10 @@ object Jpeg {
     /** One 8x8 block: huffman -> dequant -> IDCT -> plane at (px, py). */
     def decodeBlock(c: Component, px: Int, py: Int): Boolean = {
       java.util.Arrays.fill(coef, 0)
-      val t = decodeHuff(dcTab(c.td))
+      val t = in.decodeHuff(dcTab(c.td))
       if (t < 0 || t > 11) return false
       val diff = if (t == 0) 0 else {
-        val v = receive(t); if (v == Int.MinValue) return false; extend(v, t)
+        val v = in.receive(t); if (v == Int.MinValue) return false; extend(v, t)
       }
       c.pred += diff
       val qt = quant(c.tq)
@@ -825,7 +772,7 @@ object Jpeg {
       var k = 1
       var eob = false
       while (k < 64 && !eob) {
-        val rs = decodeHuff(acTab(c.ta))
+        val rs = in.decodeHuff(acTab(c.ta))
         if (rs < 0) return false
         val r = rs >> 4; val s = rs & 0x0f
         if (s == 0) {
@@ -834,7 +781,7 @@ object Jpeg {
         } else {
           k += r
           if (k > 63) return false
-          val v = receive(s); if (v == Int.MinValue) return false
+          val v = in.receive(s); if (v == Int.MinValue) return false
           val nat = ZigZag(k)
           coef(nat) = extend(v, s) * qt(nat)
           k += 1
@@ -878,11 +825,7 @@ object Jpeg {
         val last = my == mcusY - 1 && mx == mcusX - 1
         if (restartInterval > 0 && mcusLeft == 0 && !last) {
           // byte-align, expect RSTn, reset predictors
-          bitCnt = 0; hitMarker = false
-          if (pos + 2 > b.length || (b(pos) & 0xff) != 0xff ||
-              (b(pos + 1) & 0xff) != 0xd0 + rstNext)
-            return Left(s"jpeg: expected RST$rstNext at $pos")
-          pos += 2
+          if (!in.expectRst(rstNext)) return Left(s"jpeg: expected RST$rstNext at ${in.pos}")
           rstNext = (rstNext + 1) & 7
           comps.foreach(_.pred = 0)
           mcusLeft = restartInterval

@@ -16,6 +16,7 @@ package graft.codec
   * state decoded pixel sums as closed forms of doc_id.
   */
 object JpegEncoder {
+  import Bytes.be
 
   /** Annex K.1 luminance quantization table (natural order). */
   val stdLumaQuant: Array[Int] = Array(
@@ -200,7 +201,7 @@ object JpegEncoder {
   private def seg(out: java.io.ByteArrayOutputStream, marker: Int, body: Array[Byte]): Unit = {
     out.write(0xff); out.write(marker)
     val len = body.length + 2
-    out.write((len >> 8) & 0xff); out.write(len & 0xff)
+    be(out, len, 2)
     out.write(body, 0, body.length)
   }
 
@@ -558,30 +559,23 @@ object JpegEncoder {
       0x12, 0x01, 3, 0, 1, 0, 0, 0, orientation, 0, 0, 0, // tag, SHORT, count 1, value
       0, 0, 0, 0 // next IFD: none
     ).map(_.toByte)
-    val body = "Exif".getBytes("US-ASCII") ++ Array[Byte](0, 0) ++ tiff
-    val len = body.length + 2
-    val seg = Array[Byte](0xff.toByte, 0xe1.toByte,
-      ((len >> 8) & 0xff).toByte, (len & 0xff).toByte) ++ body
-    val out = new Array[Byte](jpeg.length + seg.length)
-    out(0) = jpeg(0); out(1) = jpeg(1)
-    System.arraycopy(seg, 0, out, 2, seg.length)
-    System.arraycopy(jpeg, 2, out, 2 + seg.length, jpeg.length - 2)
-    out
+    afterSoi(jpeg, 0xe1, "Exif".getBytes("US-ASCII") ++ Array[Byte](0, 0) ++ tiff)
   }
 
   /** Insert a COM (comment) segment after SOI — the test/fixture twin of
     * [[Jpeg.stripMetadata]]'s COM removal. */
   def withComment(jpeg: Array[Byte], comment: String): Array[Byte] = {
     require(Jpeg.isJpeg(jpeg), "not a jpeg")
-    val body = comment.getBytes("UTF-8")
-    val len = body.length + 2
-    val seg = Array[Byte](0xff.toByte, 0xfe.toByte,
-      ((len >> 8) & 0xff).toByte, (len & 0xff).toByte) ++ body
-    val out = new Array[Byte](jpeg.length + seg.length)
-    out(0) = jpeg(0); out(1) = jpeg(1)
-    System.arraycopy(seg, 0, out, 2, seg.length)
-    System.arraycopy(jpeg, 2, out, 2 + seg.length, jpeg.length - 2)
-    out
+    afterSoi(jpeg, 0xfe, comment.getBytes("UTF-8"))
+  }
+
+  /** `jpeg` with one marker segment inserted right after SOI. */
+  private def afterSoi(jpeg: Array[Byte], marker: Int, body: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(jpeg.length + body.length + 4)
+    out.write(jpeg, 0, 2)
+    seg(out, marker, body)
+    out.write(jpeg, 2, jpeg.length - 2)
+    out.toByteArray
   }
 
   private def clamp255(v: Int): Byte = (if (v < 0) 0 else if (v > 255) 255 else v).toByte

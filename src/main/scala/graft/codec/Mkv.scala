@@ -17,6 +17,7 @@ package graft.codec
   * the JBIG2 MQ leg.
   */
 object Mkv {
+  import Bytes.{be32, be64}
 
   final case class Info(
       docType: String,
@@ -51,10 +52,8 @@ object Mkv {
     v == (1L << (7 * len)) - 1
 
   private def beFloat(b: Array[Byte], p: Int, len: Int): Double =
-    if (len == 4) java.lang.Float.intBitsToFloat(
-      ((b(p) & 0xff) << 24) | ((b(p + 1) & 0xff) << 16) | ((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff))
-    else if (len == 8) java.lang.Double.longBitsToDouble(
-      (0 until 8).foldLeft(0L)((a, i) => (a << 8) | (b(p + i) & 0xffL)))
+    if (len == 4) java.lang.Float.intBitsToFloat(be32(b, p).toInt)
+    else if (len == 8) java.lang.Double.longBitsToDouble(be64(b, p))
     else 0.0
 
   private def beUint(b: Array[Byte], p: Int, len: Int): Long =

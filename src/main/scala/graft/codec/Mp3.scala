@@ -16,6 +16,7 @@ package graft.codec
   * per-frame sample counts), not by trusting the first frame.
   */
 object Mp3 {
+  import Bytes.{be, be32}
 
   final case class Info(
       version: String, // "MPEG1" | "MPEG2" | "MPEG2.5"
@@ -190,8 +191,7 @@ object Mp3 {
             ((b(p + 4) & 0x7f) << 21) | ((b(p + 5) & 0x7f) << 14) |
               ((b(p + 6) & 0x7f) << 7) | (b(p + 7) & 0x7f)
           else
-            ((b(p + 4) & 0xff) << 24) | ((b(p + 5) & 0xff) << 16) |
-              ((b(p + 6) & 0xff) << 8) | (b(p + 7) & 0xff)
+            be32(b, p + 4).toInt
         // subtraction form: p + 10 + size overflows Int for a forged
         // 0x7fffffff size and would slip past an addition-form bound
         if (size < 0 || size > end - p - 10) return Left("id3: bad frame size")
@@ -237,8 +237,7 @@ object Mp3 {
         body.write((size >> 21) & 0x7f); body.write((size >> 14) & 0x7f)
         body.write((size >> 7) & 0x7f); body.write(size & 0x7f)
       } else {
-        body.write((size >> 24) & 0xff); body.write((size >> 16) & 0xff)
-        body.write((size >> 8) & 0xff); body.write(size & 0xff)
+        be(body, size, 4)
       }
       body.write(0); body.write(0)
       body.write(enc)

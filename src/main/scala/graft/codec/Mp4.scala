@@ -19,6 +19,7 @@ package graft.codec
   * real encoder output).
   */
 object Mp4 {
+  import Bytes.{be, be32, be64}
 
   final case class Track(handler: String, width: Int, height: Int)
   final case class Info(
@@ -41,12 +42,6 @@ object Mp4 {
   def info(b: Array[Byte]): Either[String, Info] =
     try infoImpl(b)
     catch { case e: Exception => Left(s"mp4: ${e.getClass.getSimpleName}: ${e.getMessage}") }
-
-  private def be32(b: Array[Byte], p: Int): Long =
-    ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |
-      ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
-
-  private def be64(b: Array[Byte], p: Int): Long = (be32(b, p) << 32) | be32(b, p + 4)
 
   private def infoImpl(b: Array[Byte]): Either[String, Info] = {
     if (b == null || b.length < 16) return Left("mp4: too short")
@@ -169,29 +164,32 @@ object Mp4 {
     }
   }
 
+  private def box(tag: String, payload: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    be(out, 8 + payload.length, 4)
+    out.write(tag.getBytes("US-ASCII"))
+    out.write(payload, 0, payload.length)
+    out.toByteArray
+  }
+
+  /** Big-endian 32-bit fields, in order. */
+  private def words(vs: Long*): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    vs.foreach(be(out, _, 4))
+    out.toByteArray
+  }
+
   /** Synthesis twin for labeling tests: minimal ftyp + moov(mvhd +
     * video trak(tkhd + mdia/hdlr)) + empty mdat. */
   def synthesize(brand: String, timescale: Int, duration: Long,
       videoW: Int, videoH: Int, extraAudioTrack: Boolean = false): Array[Byte] = {
     require(brand.length == 4 && timescale > 0 && duration >= 0)
-    def box(tag: String, payload: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      val size = 8 + payload.length
-      out.write((size >> 24) & 0xff); out.write((size >> 16) & 0xff)
-      out.write((size >> 8) & 0xff); out.write(size & 0xff)
-      out.write(tag.getBytes("US-ASCII"))
-      out.write(payload, 0, payload.length)
-      out.toByteArray
-    }
-    def be(v: Long, n: Int): Array[Byte] =
-      Array.tabulate[Byte](n)(i => ((v >> (8 * (n - 1 - i))) & 0xff).toByte)
-    val ftyp = box("ftyp", brand.getBytes("US-ASCII") ++ be(0, 4) ++ "isom".getBytes("US-ASCII"))
-    val mvhd = box("mvhd", be(0, 4) ++ be(0, 4) ++ be(0, 4) ++
-      be(timescale, 4) ++ be(duration, 4) ++ new Array[Byte](80))
+    val ftyp = box("ftyp", brand.getBytes("US-ASCII") ++ words(0) ++ "isom".getBytes("US-ASCII"))
+    val mvhd = box("mvhd", words(0, 0, 0, timescale, duration) ++ new Array[Byte](80))
     def trak(handler: String, w: Int, h: Int): Array[Byte] = {
-      val tkhd = box("tkhd", be(0, 4) ++ be(0, 4) ++ be(0, 4) ++ be(1, 4) ++
-        new Array[Byte](4 + 4 + 8 + 8 + 36) ++ be(w.toLong << 16, 4) ++ be(h.toLong << 16, 4))
-      val hdlr = box("hdlr", be(0, 4) ++ be(0, 4) ++ handler.getBytes("US-ASCII") ++
+      val tkhd = box("tkhd", words(0, 0, 0, 1) ++
+        new Array[Byte](4 + 4 + 8 + 8 + 36) ++ words(w.toLong << 16, h.toLong << 16))
+      val hdlr = box("hdlr", words(0, 0) ++ handler.getBytes("US-ASCII") ++
         new Array[Byte](12) ++ Array[Byte](0))
       val mdia = box("mdia", hdlr)
       box("trak", tkhd ++ mdia)
@@ -208,24 +206,13 @@ object Mp4 {
     * coded payload (av01/hvc1 items) is irrelevant to labeling. */
   def synthesizeHeif(brand: String, dims: Seq[(Int, Int)]): Array[Byte] = {
     require(brand.length == 4 && dims.nonEmpty)
-    def box(tag: String, payload: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      val size = 8 + payload.length
-      out.write((size >> 24) & 0xff); out.write((size >> 16) & 0xff)
-      out.write((size >> 8) & 0xff); out.write(size & 0xff)
-      out.write(tag.getBytes("US-ASCII"))
-      out.write(payload, 0, payload.length)
-      out.toByteArray
-    }
-    def be(v: Long, n: Int): Array[Byte] =
-      Array.tabulate[Byte](n)(i => ((v >> (8 * (n - 1 - i))) & 0xff).toByte)
-    val ftyp = box("ftyp", brand.getBytes("US-ASCII") ++ be(0, 4) ++ "mif1".getBytes("US-ASCII"))
-    val hdlr = box("hdlr", be(0, 4) ++ be(0, 4) ++ "pict".getBytes("US-ASCII") ++ new Array[Byte](12))
+    val ftyp = box("ftyp", brand.getBytes("US-ASCII") ++ words(0) ++ "mif1".getBytes("US-ASCII"))
+    val hdlr = box("hdlr", words(0, 0) ++ "pict".getBytes("US-ASCII") ++ new Array[Byte](12))
     val ispes = dims.map { case (w, h) =>
-      box("ispe", be(0, 4) ++ be(w.toLong, 4) ++ be(h.toLong, 4))
+      box("ispe", words(0, w, h))
     }.reduce(_ ++ _)
     val iprp = box("iprp", box("ipco", ispes))
-    val meta = box("meta", be(0, 4) ++ hdlr ++ iprp)
+    val meta = box("meta", words(0) ++ hdlr ++ iprp)
     ftyp ++ meta ++ box("mdat", Array.emptyByteArray)
   }
 }

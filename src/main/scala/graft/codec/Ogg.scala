@@ -6,6 +6,7 @@ package graft.codec
   * granule position. No audio decode (fenced).
   */
 object Ogg {
+  import Bytes.{le, le16, le32, le64}
 
   final case class Info(
       codec: String, // "opus" | "vorbis" | "unknown"
@@ -21,11 +22,6 @@ object Ogg {
   def info(b: Array[Byte]): Either[String, Info] =
     try infoImpl(b)
     catch { case e: Exception => Left(s"ogg: ${e.getClass.getSimpleName}: ${e.getMessage}") }
-
-  private def le16(b: Array[Byte], p: Int): Int = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], p: Int): Long =
-    (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) | ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-  private def le64(b: Array[Byte], p: Int): Long = le32(b, p) | (le32(b, p + 4) << 32)
 
   private def infoImpl(b: Array[Byte]): Either[String, Info] = {
     if (!isOgg(b)) return Left("ogg: bad capture pattern")
@@ -149,11 +145,10 @@ object Ogg {
       tags: Seq[(String, String)] = Nil): Array[Byte] = {
     require(codec == "opus" || codec == "vorbis")
     val out = new java.io.ByteArrayOutputStream()
-    def le(v: Long, n: Int): Unit = (0 until n).foreach(i => out.write(((v >> (8 * i)) & 0xff).toInt))
     def page(headerType: Int, granule: Long, seq: Int, body: Array[Byte]): Unit = {
       out.write("OggS".getBytes("US-ASCII")); out.write(0)
       out.write(headerType)
-      le(granule, 8); le(77L, 4); le(seq.toLong, 4); le(0L, 4) // serial 77, crc 0
+      le(out, granule, 8); le(out, 77L, 4); le(out, seq.toLong, 4); le(out, 0L, 4) // serial 77, crc 0
       val nSegs = body.length / 255 + 1
       require(nSegs <= 255, "body too large for one page")
       out.write(nSegs)

@@ -26,6 +26,7 @@ package graft.codec
   * is what lets the q200 oracle state decoded pixels directly.
   */
 object Png {
+  import Bytes.{be, be32}
 
   private val Signature = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
@@ -40,9 +41,6 @@ object Png {
     c.getValue
   }
 
-  private def u32(b: Array[Byte], p: Int): Long =
-    ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) | ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
-
   def decode(b: Array[Byte]): Either[String, Jpeg.Image] =
     try decodeImpl(b)
     catch { case e: Exception => Left(s"png: ${e.getClass.getSimpleName}: ${e.getMessage}") }
@@ -56,15 +54,15 @@ object Png {
     val idat = new java.io.ByteArrayOutputStream()
     var sawEnd = false
     while (p + 12 <= b.length && !sawEnd) {
-      val len = u32(b, p)
+      val len = be32(b, p)
       if (len > Int.MaxValue || p + 12 + len > b.length) return Left("png: chunk overruns file")
       val l = len.toInt
       val typ = new String(b, p + 4, 4, "US-ASCII")
-      if (crc(b, p + 4, 4 + l) != u32(b, p + 8 + l)) return Left(s"png: bad CRC on $typ")
+      if (crc(b, p + 4, 4 + l) != be32(b, p + 8 + l)) return Left(s"png: bad CRC on $typ")
       typ match {
         case "IHDR" =>
           if (l != 13) return Left("png: bad IHDR length")
-          width = u32(b, p + 8).toInt; height = u32(b, p + 12).toInt
+          width = be32(b, p + 8).toInt; height = be32(b, p + 12).toInt
           bitDepth = b(p + 16) & 0xff; colorType = b(p + 17) & 0xff
           if ((b(p + 18) & 0xff) != 0) return Left("png: unknown compression method")
           if ((b(p + 19) & 0xff) != 0) return Left("png: unknown filter method")
@@ -299,44 +297,10 @@ object Png {
       System.arraycopy(pix, y * stride, raw, y * (stride + 1) + 1, stride)
       y += 1
     }
-    val defl = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION)
-    defl.setInput(raw); defl.finish()
-    val zbuf = new java.io.ByteArrayOutputStream(raw.length / 2 + 64)
-    val tmp = new Array[Byte](8192)
-    while (!defl.finished()) zbuf.write(tmp, 0, defl.deflate(tmp))
-    defl.end()
-
-    val out = new java.io.ByteArrayOutputStream(zbuf.size() + 128)
-    out.write(Signature, 0, 8)
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      val l = data.length
-      out.write((l >>> 24) & 0xff); out.write((l >>> 16) & 0xff)
-      out.write((l >>> 8) & 0xff); out.write(l & 0xff)
-      val td = new Array[Byte](4 + l)
-      var i = 0
-      while (i < 4) { td(i) = typ.charAt(i).toByte; i += 1 }
-      System.arraycopy(data, 0, td, 4, l)
-      out.write(td, 0, td.length)
-      val c = crc(td, 0, td.length)
-      out.write(((c >>> 24) & 0xff).toInt); out.write(((c >>> 16) & 0xff).toInt)
-      out.write(((c >>> 8) & 0xff).toInt); out.write((c & 0xff).toInt)
-    }
-    val ihdr = new Array[Byte](13)
-    def be32(a: Array[Byte], p: Int, v: Int): Unit = {
-      a(p) = ((v >>> 24) & 0xff).toByte; a(p + 1) = ((v >>> 16) & 0xff).toByte
-      a(p + 2) = ((v >>> 8) & 0xff).toByte; a(p + 3) = (v & 0xff).toByte
-    }
-    be32(ihdr, 0, width); be32(ihdr, 4, height)
-    ihdr(8) = 8 // bit depth
-    ihdr(9) = (if (nComponents == 1) 0 else 2).toByte
-    ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = 0
-    chunk("IHDR", ihdr)
-    chunk("IDAT", zbuf.toByteArray)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
+    assemble(width, height, 8, if (nComponents == 1) 0 else 2, null, raw)
   }
 
-  // shared chunk-stream assembly for the low-bit twins
+  // shared chunk-stream assembly for every encoder
   private def assemble(width: Int, height: Int, bitDepth: Int, colorType: Int,
       plte: Array[Byte], packedRows: Array[Byte]): Array[Byte] = {
     val defl = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION)
@@ -349,23 +313,17 @@ object Png {
     out.write(Signature, 0, 8)
     def chunk(typ: String, data: Array[Byte]): Unit = {
       val l = data.length
-      out.write((l >>> 24) & 0xff); out.write((l >>> 16) & 0xff)
-      out.write((l >>> 8) & 0xff); out.write(l & 0xff)
+      be(out, l, 4)
       val td = new Array[Byte](4 + l)
       var i = 0
       while (i < 4) { td(i) = typ.charAt(i).toByte; i += 1 }
       System.arraycopy(data, 0, td, 4, l)
       out.write(td, 0, td.length)
       val c = crc(td, 0, td.length)
-      out.write(((c >>> 24) & 0xff).toInt); out.write(((c >>> 16) & 0xff).toInt)
-      out.write(((c >>> 8) & 0xff).toInt); out.write((c & 0xff).toInt)
+      be(out, c, 4)
     }
     val ihdr = new Array[Byte](13)
-    def be32(a: Array[Byte], p: Int, v: Int): Unit = {
-      a(p) = ((v >>> 24) & 0xff).toByte; a(p + 1) = ((v >>> 16) & 0xff).toByte
-      a(p + 2) = ((v >>> 8) & 0xff).toByte; a(p + 3) = (v & 0xff).toByte
-    }
-    be32(ihdr, 0, width); be32(ihdr, 4, height)
+    be(ihdr, 0, width, 4); be(ihdr, 4, height, 4)
     ihdr(8) = bitDepth.toByte; ihdr(9) = colorType.toByte
     chunk("IHDR", ihdr)
     if (plte != null) chunk("PLTE", plte)

@@ -30,6 +30,7 @@ package graft.codec
   * state decoded pixels directly.
   */
 object Tiff {
+  import Bytes.{MsbBitReader, MsbBitWriter, le, u16, u32}
 
   def isTiff(b: Array[Byte]): Boolean =
     b != null && b.length >= 8 &&
@@ -46,16 +47,10 @@ object Tiff {
   private def decodeImpl(b: Array[Byte]): Either[String, Jpeg.Image] = {
     if (!isTiff(b)) return Left("tiff: bad header")
     val le = b(0) == 'I'
-    def u16(p: Int): Int =
-      if (le) (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-      else ((b(p) & 0xff) << 8) | (b(p + 1) & 0xff)
-    def u32(p: Int): Long =
-      if (le) (u16(p).toLong) | (u16(p + 2).toLong << 16)
-      else (u16(p).toLong << 16) | u16(p + 2).toLong
 
-    val ifdOff = u32(4)
+    val ifdOff = u32(b, 4, le)
     if (ifdOff < 8 || ifdOff + 2 > b.length) return Left("tiff: bad IFD offset")
-    val nEntries = u16(ifdOff.toInt)
+    val nEntries = u16(b, ifdOff.toInt, le)
     val base = ifdOff.toInt + 2
     // the IFD ends with a 4-byte next-IFD pointer — require it too
     if (base + nEntries * 12 + 4 > b.length) return Left("tiff: IFD overruns file")
@@ -64,7 +59,7 @@ object Tiff {
     var i = 0
     while (i < nEntries) {
       val p = base + i * 12
-      entries.put(u16(p), Entry(u16(p + 2), u32(p + 4), p + 8))
+      entries.put(u16(b, p, le), Entry(u16(b, p + 2, le), u32(b, p + 4, le), p + 8))
       i += 1
     }
 
@@ -85,12 +80,12 @@ object Tiff {
       val total = sz * e.count
       if (e.count < 0 || e.count > 65536) return null
       val at = if (total <= 4) e.valOff else {
-        val off = u32(e.valOff)
+        val off = u32(b, e.valOff, le)
         if (off + total > b.length) return null
         off.toInt
       }
       Array.tabulate(e.count.toInt) { k =>
-        if (e.typ == 3) u16(at + 2 * k).toLong else u32(at + 4 * k)
+        if (e.typ == 3) u16(b, at + 2 * k, le).toLong else u32(b, at + 4 * k, le)
       }
     }
     def scalar(tag: Int, default: Long = -1L): Long = {
@@ -104,7 +99,7 @@ object Tiff {
       if (e.count < 0 || e.count > (1 << 20)) return null
       val total = e.count.toInt
       val at = if (total <= 4) e.valOff else {
-        val off = u32(e.valOff)
+        val off = u32(b, e.valOff, le)
         if (off + total > b.length) return null
         off.toInt
       }
@@ -398,19 +393,11 @@ object Tiff {
       val suffix = new Array[Byte](4096)
       var next = 258
       var width = 9
-      var acc = 0L; var nBits = 0; var p = 0
+      val r = new MsbBitReader(data, 0, data.length)
       var old = -1
       val stack = new Array[Byte](4096)
-      def readCode(): Int = {
-        while (nBits < width) {
-          if (p >= data.length) return -1
-          acc = (acc << 8) | (data(p) & 0xff); p += 1; nBits += 8
-        }
-        nBits -= width
-        ((acc >>> nBits) & ((1 << width) - 1)).toInt
-      }
       while (true) {
-        val code = readCode()
+        val code = r.bits(width)
         if (code < 0) return Left("tiff: lzw stream truncated")
         if (code == Eoi) {
           if (outPos < expected) return Left("tiff: lzw output short")
@@ -451,17 +438,12 @@ object Tiff {
     }
 
     def encode(data: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream(data.length / 2 + 16)
-      var acc = 0L; var nBits = 0
+      val out = new MsbBitWriter
       var width = 9
-      def put(code: Int): Unit = {
-        acc = (acc << width) | code; nBits += width
-        while (nBits >= 8) { out.write(((acc >>> (nBits - 8)) & 0xff).toInt); nBits -= 8 }
-      }
       // table: (prefixCode << 8 | byte) -> code
       var table = new java.util.HashMap[Integer, Integer]()
       var next = 258
-      put(Clear)
+      out.bits(Clear, width)
       var cur = -1
       var i = 0
       while (i < data.length) {
@@ -472,7 +454,7 @@ object Tiff {
           val hit = table.get(key)
           if (hit != null) cur = hit
           else {
-            put(cur)
+            out.bits(cur, width)
             table.put(key, next)
             next += 1
             // early-change alignment: the encoder's k-th add happens one
@@ -482,7 +464,7 @@ object Tiff {
             // validated both ways against ImageIO's independent codec
             if (next == (1 << width) && width < 12) width += 1
             if (next >= 4094) { // table nearly full: reset
-              put(Clear)
+              out.bits(Clear, width)
               table = new java.util.HashMap[Integer, Integer]()
               next = 258
               width = 9
@@ -492,16 +474,15 @@ object Tiff {
         }
         i += 1
       }
-      if (cur >= 0) put(cur)
+      if (cur >= 0) out.bits(cur, width)
       // EOI fencepost: mid-stream the decoder lags the encoder by one
       // add, so enc-bump-at-2^w / dec-bump-at-2^w-1 stay aligned — but
       // at EOI the add counts coincide (no add follows the final code),
       // so when the table size sits exactly on 2^w - 1 the decoder has
       // widened and the encoder must too (ImageIO's decoder agrees)
       if (next == (1 << width) - 1 && width < 12) width += 1
-      put(Eoi)
-      if (nBits > 0) out.write(((acc << (8 - nBits)) & 0xff).toInt)
-      out.toByteArray
+      out.bits(Eoi, width)
+      out.result()
     }
   }
 
@@ -703,27 +684,25 @@ object Tiff {
     val toExt = if (n > 1) { val o = extOff; extOff += 4 * n; o } else -1
     val tcExt = if (n > 1) { val o = extOff; extOff += 4 * n; o } else -1
     val out = new Array[Byte](extOff)
-    def le16(p: Int, v: Int): Unit = { out(p) = (v & 0xff).toByte; out(p + 1) = ((v >> 8) & 0xff).toByte }
-    def le32(p: Int, v: Int): Unit = { le16(p, v & 0xffff); le16(p + 2, (v >>> 16) & 0xffff) }
     out(0) = 'I'; out(1) = 'I'; out(2) = 42; out(3) = 0
-    le32(4, ifdOff)
+    le(out, 4, ifdOff, 4)
     k = 0
     while (k < n) {
       System.arraycopy(tiles(k), 0, out, tileOffsets(k), tiles(k).length)
       k += 1
     }
-    le16(ifdOff, nE)
+    le(out, ifdOff, nE, 2)
     var e = 0
     def entry(tag: Int, typ: Int, count: Int, value: Int): Unit = {
       val p = ifdOff + 2 + e * 12
-      le16(p, tag); le16(p + 2, typ); le32(p + 4, count)
-      if (typ == 3 && count == 1) { le16(p + 8, value); le16(p + 10, 0) }
-      else le32(p + 8, value)
+      le(out, p, tag, 2); le(out, p + 2, typ, 2); le(out, p + 4, count, 4)
+      if (typ == 3 && count == 1) { le(out, p + 8, value, 2); le(out, p + 10, 0, 2) }
+      else le(out, p + 8, value, 4)
       e += 1
     }
     entry(256, 4, 1, width)
     entry(257, 4, 1, height)
-    if (spp == 3) { entry(258, 3, 3, bpsExt); le16(bpsExt, 8); le16(bpsExt + 2, 8); le16(bpsExt + 4, 8) }
+    if (spp == 3) { entry(258, 3, 3, bpsExt); le(out, bpsExt, 8, 2); le(out, bpsExt + 2, 8, 2); le(out, bpsExt + 4, 8, 2) }
     else entry(258, 3, 1, 8)
     entry(259, 3, 1, compression)
     entry(262, 3, 1, photometric)
@@ -734,14 +713,14 @@ object Tiff {
     if (n > 1) {
       entry(324, 4, n, toExt)
       var j = 0
-      while (j < n) { le32(toExt + 4 * j, tileOffsets(j)); j += 1 }
+      while (j < n) { le(out, toExt + 4 * j, tileOffsets(j), 4); j += 1 }
     } else entry(324, 4, 1, tileOffsets(0))
     if (n > 1) {
       entry(325, 4, n, tcExt)
       var j = 0
-      while (j < n) { le32(tcExt + 4 * j, tiles(j).length); j += 1 }
+      while (j < n) { le(out, tcExt + 4 * j, tiles(j).length, 4); j += 1 }
     } else entry(325, 4, 1, tiles(0).length)
-    le32(ifdOff + 2 + nE * 12, 0)
+    le(out, ifdOff + 2 + nE * 12, 0, 4)
     out
   }
 
@@ -771,44 +750,42 @@ object Tiff {
     val soExt = if (nStrips > 1) { val o = extOff; extOff += 4 * nStrips; o } else -1
     val sbExt = if (nStrips > 1) { val o = extOff; extOff += 4 * nStrips; o } else -1
     val out = new Array[Byte](extOff)
-    def le16(p: Int, v: Int): Unit = { out(p) = (v & 0xff).toByte; out(p + 1) = ((v >> 8) & 0xff).toByte }
-    def le32(p: Int, v: Int): Unit = { le16(p, v & 0xffff); le16(p + 2, (v >>> 16) & 0xffff) }
     out(0) = 'I'; out(1) = 'I'; out(2) = 42; out(3) = 0
-    le32(4, ifdOff)
+    le(out, 4, ifdOff, 4)
     k = 0
     while (k < nStrips) {
       System.arraycopy(strips(k), 0, out, stripOffsets(k), strips(k).length)
       k += 1
     }
-    le16(ifdOff, nE)
+    le(out, ifdOff, nE, 2)
     var e = 0
     def entry(tag: Int, typ: Int, count: Int, value: Int): Unit = {
       val p = ifdOff + 2 + e * 12
-      le16(p, tag); le16(p + 2, typ); le32(p + 4, count)
-      if (typ == 3 && count == 1) { le16(p + 8, value); le16(p + 10, 0) }
-      else le32(p + 8, value)
+      le(out, p, tag, 2); le(out, p + 2, typ, 2); le(out, p + 4, count, 4)
+      if (typ == 3 && count == 1) { le(out, p + 8, value, 2); le(out, p + 10, 0, 2) }
+      else le(out, p + 8, value, 4)
       e += 1
     }
     entry(256, 4, 1, width)
     entry(257, 4, 1, height)
-    if (spp == 3) { entry(258, 3, 3, bpsExt); le16(bpsExt, 8); le16(bpsExt + 2, 8); le16(bpsExt + 4, 8) }
+    if (spp == 3) { entry(258, 3, 3, bpsExt); le(out, bpsExt, 8, 2); le(out, bpsExt + 2, 8, 2); le(out, bpsExt + 4, 8, 2) }
     else entry(258, 3, 1, bitsPerSample)
     entry(259, 3, 1, compression)
     entry(262, 3, 1, photometric)
     if (nStrips > 1) {
       entry(273, 4, nStrips, soExt)
       var j = 0
-      while (j < nStrips) { le32(soExt + 4 * j, stripOffsets(j)); j += 1 }
+      while (j < nStrips) { le(out, soExt + 4 * j, stripOffsets(j), 4); j += 1 }
     } else entry(273, 4, 1, stripOffsets(0))
     entry(277, 3, 1, spp)
     entry(278, 4, 1, rps)
     if (nStrips > 1) {
       entry(279, 4, nStrips, sbExt)
       var j = 0
-      while (j < nStrips) { le32(sbExt + 4 * j, strips(j).length); j += 1 }
+      while (j < nStrips) { le(out, sbExt + 4 * j, strips(j).length, 4); j += 1 }
     } else entry(279, 4, 1, strips(0).length)
     if (predictor == 2) entry(317, 3, 1, 2)
-    le32(ifdOff + 2 + nE * 12, 0) // next-IFD pointer: none
+    le(out, ifdOff + 2 + nE * 12, 0, 4) // next-IFD pointer: none
     out
   }
 }

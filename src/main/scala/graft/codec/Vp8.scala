@@ -30,9 +30,10 @@ package graft.codec
   *
   * Output is the decoded 4:2:0 YUV (the representation libwebp pins);
   * [[WebpVp8l]] converts to RGB for the Image consumers with the
-  * documented integer BT.601 full-range conversion.
+  * documented integer BT.601 limited-range conversion.
   */
 object Vp8 {
+  import Bytes.{le16, le24}
 
   /** Decoded 4:2:0 frame: y is w*h, u/v are ((w+1)/2)*((h+1)/2). */
   final case class Yuv(width: Int, height: Int,
@@ -107,13 +108,13 @@ object Vp8 {
 
   private def decodeImpl(b: Array[Byte], off: Int, len: Int): Either[String, Yuv] = {
     if (len < 10) return Left("vp8: too short")
-    val tag = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) | ((b(off + 2) & 0xff) << 16)
+    val tag = le24(b, off)
     if ((tag & 1) != 0) return Left("vp8: not a key frame")
     val part0Len = tag >> 5
     if ((b(off + 3) & 0xff) != 0x9d || (b(off + 4) & 0xff) != 0x01 || (b(off + 5) & 0xff) != 0x2a)
       return Left("vp8: bad start code")
-    val width = ((b(off + 6) & 0xff) | ((b(off + 7) & 0xff) << 8)) & 0x3fff
-    val height = ((b(off + 8) & 0xff) | ((b(off + 9) & 0xff) << 8)) & 0x3fff
+    val width = le16(b, off + 6) & 0x3fff
+    val height = le16(b, off + 8) & 0x3fff
     if (width == 0 || height == 0) return Left("vp8: zero dimensions")
     if (width.toLong * height > (1L << 26)) return Left("vp8: image too large")
     val dataStart = off + 10
@@ -177,8 +178,7 @@ object Vp8 {
     while (pi < nParts) {
       val sz =
         if (pi == nParts - 1) (off + len) - ps
-        else (b(partSizesAt + 3 * pi) & 0xff) | ((b(partSizesAt + 3 * pi + 1) & 0xff) << 8) |
-          ((b(partSizesAt + 3 * pi + 2) & 0xff) << 16)
+        else le24(b, partSizesAt + 3 * pi)
       if (sz < 0 || ps + sz > off + len) return Left("vp8: token partition overruns")
       partStart(pi) = ps; partEnd(pi) = ps + sz
       ps += sz

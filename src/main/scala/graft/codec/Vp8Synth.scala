@@ -13,6 +13,7 @@ package graft.codec
   * form while the stream still exercises the full header / mode /
   * token / reconstruction path of the libwebp-pinned decoder. */
 object Vp8Synth {
+  import Bytes.le
 
   /** RFC 6386 §7.3 boolean encoder. */
   final class BoolWriter {
@@ -102,7 +103,7 @@ object Vp8Synth {
 
     val out = new java.io.ByteArrayOutputStream()
     val tag = (part0.length << 5) | (1 << 4) // show_frame, version 0, key frame
-    out.write(tag & 0xff); out.write((tag >> 8) & 0xff); out.write((tag >> 16) & 0xff)
+    le(out, tag, 3)
     out.write(0x9d); out.write(0x01); out.write(0x2a)
     out.write(width & 0xff); out.write((width >> 8) & 0x3f)
     out.write(height & 0xff); out.write((height >> 8) & 0x3f)
@@ -114,11 +115,10 @@ object Vp8Synth {
   /** Wrap a raw VP8 payload in a RIFF/WEBP container. */
   def wrapWebp(payload: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Unit = (0 until 4).foreach(k => out.write((v >> (8 * k)) & 0xff))
     out.write("RIFF".getBytes("US-ASCII"))
-    le32(4 + 8 + payload.length + (payload.length & 1))
+    le(out, 4 + 8 + payload.length + (payload.length & 1), 4)
     out.write("WEBP".getBytes("US-ASCII"))
-    out.write("VP8 ".getBytes("US-ASCII")); le32(payload.length)
+    out.write("VP8 ".getBytes("US-ASCII")); le(out, payload.length, 4)
     out.write(payload, 0, payload.length)
     if ((payload.length & 1) == 1) out.write(0)
     out.toByteArray

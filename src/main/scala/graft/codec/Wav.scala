@@ -20,6 +20,7 @@ package graft.codec
   * (0xFFFE) wrapper with a PCM sub-format GUID is accepted as PCM.
   */
 object Wav {
+  import Bytes.{le, le16, le32}
 
   final case class Audio(channels: Int, sampleRate: Int, bitsPerSample: Int,
       samples: Array[Short]) { // normalized signed 16-bit, interleaved if stereo
@@ -31,9 +32,6 @@ object Wav {
       b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
       b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E'
 
-  private def u16(b: Array[Byte], p: Int): Int = (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8)
-  private def u32(b: Array[Byte], p: Int): Long =
-    (u16(b, p).toLong) | (u16(b, p + 2).toLong << 16)
 
   /** Parse a PCM WAV file. Never throws on malformed input. */
   def decode(b: Array[Byte]): Either[String, Audio] =
@@ -47,20 +45,20 @@ object Wav {
     var dataOff = -1; var dataLen = -1
     while (p + 8 <= b.length && (dataOff < 0 || fmtCode < 0)) {
       val id = new String(b, p, 4, "US-ASCII")
-      val size = u32(b, p + 4)
+      val size = le32(b, p + 4)
       if (size < 0 || size > Int.MaxValue || p + 8 + size > b.length)
         return Left(s"wav: chunk '$id' overruns file")
       val sz = size.toInt
       id match {
         case "fmt " =>
           if (sz < 16) return Left("wav: fmt chunk too short")
-          fmtCode = u16(b, p + 8)
-          channels = u16(b, p + 10)
-          rate = u32(b, p + 12).toInt
-          bits = u16(b, p + 22)
+          fmtCode = le16(b, p + 8)
+          channels = le16(b, p + 10)
+          rate = le32(b, p + 12).toInt
+          bits = le16(b, p + 22)
           if (fmtCode == 0xfffe) { // WAVE_FORMAT_EXTENSIBLE: sub-format GUID
             if (sz < 40) return Left("wav: extensible fmt too short")
-            fmtCode = u16(b, p + 8 + 24)
+            fmtCode = le16(b, p + 8 + 24)
           }
         case "data" =>
           dataOff = p + 8; dataLen = sz
@@ -104,8 +102,7 @@ object Wav {
         }
       case _ => // 32-bit IEEE float
         while (i < n) {
-          val bits32 = (b(dataOff + 4 * i) & 0xff) | ((b(dataOff + 4 * i + 1) & 0xff) << 8) |
-            ((b(dataOff + 4 * i + 2) & 0xff) << 16) | ((b(dataOff + 4 * i + 3) & 0xff) << 24)
+          val bits32 = le32(b, dataOff + 4 * i).toInt
           val f = java.lang.Float.intBitsToFloat(bits32)
           val scaled =
             if (f.isNaN) 0L
@@ -141,20 +138,18 @@ object Wav {
     val dataLen = samples.length * 2
     val out = new Array[Byte](44 + dataLen)
     def put4(p: Int, s: String): Unit = { var i = 0; while (i < 4) { out(p + i) = s.charAt(i).toByte; i += 1 } }
-    def le16(p: Int, v: Int): Unit = { out(p) = (v & 0xff).toByte; out(p + 1) = ((v >> 8) & 0xff).toByte }
-    def le32(p: Int, v: Int): Unit = { le16(p, v & 0xffff); le16(p + 2, (v >>> 16) & 0xffff) }
-    put4(0, "RIFF"); le32(4, 36 + dataLen); put4(8, "WAVE")
-    put4(12, "fmt "); le32(16, 16)
-    le16(20, 1) // PCM
-    le16(22, channels)
-    le32(24, sampleRate)
-    le32(28, sampleRate * channels * 2) // byte rate
-    le16(32, channels * 2) // block align
-    le16(34, 16) // bits
-    put4(36, "data"); le32(40, dataLen)
+    put4(0, "RIFF"); le(out, 4, 36 + dataLen, 4); put4(8, "WAVE")
+    put4(12, "fmt "); le(out, 16, 16, 4)
+    le(out, 20, 1, 2) // PCM
+    le(out, 22, channels, 2)
+    le(out, 24, sampleRate, 4)
+    le(out, 28, sampleRate * channels * 2, 4) // byte rate
+    le(out, 32, channels * 2, 2) // block align
+    le(out, 34, 16, 2) // bits
+    put4(36, "data"); le(out, 40, dataLen, 4)
     var i = 0
     while (i < samples.length) {
-      le16(44 + 2 * i, samples(i) & 0xffff)
+      le(out, 44 + 2 * i, samples(i) & 0xffff, 2)
       i += 1
     }
     out
@@ -168,13 +163,11 @@ object Wav {
     require(channels == 1 || channels == 2, "mono or stereo only")
     val out = new Array[Byte](44 + payload.length)
     def put4(p: Int, s: String): Unit = { var i = 0; while (i < 4) { out(p + i) = s.charAt(i).toByte; i += 1 } }
-    def le16(p: Int, v: Int): Unit = { out(p) = (v & 0xff).toByte; out(p + 1) = ((v >> 8) & 0xff).toByte }
-    def le32(p: Int, v: Int): Unit = { le16(p, v & 0xffff); le16(p + 2, (v >>> 16) & 0xffff) }
-    put4(0, "RIFF"); le32(4, 36 + payload.length); put4(8, "WAVE")
-    put4(12, "fmt "); le32(16, 16); le16(20, 1); le16(22, channels)
-    le32(24, sampleRate); le32(28, sampleRate * channels * bits / 8)
-    le16(32, channels * bits / 8); le16(34, bits)
-    put4(36, "data"); le32(40, payload.length)
+    put4(0, "RIFF"); le(out, 4, 36 + payload.length, 4); put4(8, "WAVE")
+    put4(12, "fmt "); le(out, 16, 16, 4); le(out, 20, 1, 2); le(out, 22, channels, 2)
+    le(out, 24, sampleRate, 4); le(out, 28, sampleRate * channels * bits / 8, 4)
+    le(out, 32, channels * bits / 8, 2); le(out, 34, bits, 2)
+    put4(36, "data"); le(out, 40, payload.length, 4)
     payload.copyToArray(out, 44)
     out
   }

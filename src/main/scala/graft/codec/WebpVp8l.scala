@@ -29,6 +29,7 @@ package graft.codec
   * header cannot OOM an executor.
   */
 object WebpVp8l {
+  import Bytes.{LsbBitReader, LsbBitWriter, le, le16, le24, le32}
 
   // ------------------------------------------------------------ container
 
@@ -53,8 +54,7 @@ object WebpVp8l {
     var p = 12
     while (p + 8 <= b.length) {
       val tag = new String(b, p, 4, "US-ASCII")
-      val size = (b(p + 4) & 0xff) | ((b(p + 5) & 0xff) << 8) |
-        ((b(p + 6) & 0xff) << 16) | ((b(p + 7) & 0xff) << 24)
+      val size = le32(b, p + 4).toInt
       // subtraction form: p + 8 + size overflows Int for a forged
       // ~2^31 size and would wrap past an addition-form bound
       if (size < 0 || size > b.length - p - 8) return Left("webp: truncated chunk")
@@ -107,11 +107,9 @@ object WebpVp8l {
     if (!isWebp(b)) return Left("webp: bad signature")
     var p = 12
     var canvas: Option[(Int, Int)] = None
-    def le24(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16)
     while (p + 8 <= b.length) {
       val tag = new String(b, p, 4, "US-ASCII")
-      val size = (b(p + 4) & 0xff) | ((b(p + 5) & 0xff) << 8) |
-        ((b(p + 6) & 0xff) << 16) | ((b(p + 7) & 0xff) << 24)
+      val size = le32(b, p + 4).toInt
       // subtraction form: p + 8 + size overflows Int for a forged
       // ~2^31 size and would wrap past an addition-form bound
       if (size < 0 || size > b.length - p - 8) return Left("webp: truncated chunk")
@@ -119,11 +117,10 @@ object WebpVp8l {
       tag match {
         case "VP8X" =>
           if (size < 10) return Left("webp: short VP8X")
-          canvas = Some((1 + le24(d + 4), 1 + le24(d + 7)))
+          canvas = Some((1 + le24(b, d + 4), 1 + le24(b, d + 7)))
         case "VP8L" =>
           if (size < 5 || (b(d) & 0xff) != 0x2f) return Left("webp: bad vp8l signature")
-          val bits = (b(d + 1) & 0xff) | ((b(d + 2) & 0xff) << 8) |
-            ((b(d + 3) & 0xff) << 16) | ((b(d + 4) & 0xff) << 24)
+          val bits = le32(b, d + 1).toInt
           val w = (bits & 0x3fff) + 1
           val h = ((bits >> 14) & 0x3fff) + 1
           val (cw, ch) = canvas.getOrElse((w, h))
@@ -134,8 +131,8 @@ object WebpVp8l {
           if (!keyframe) return Left("webp: not a keyframe")
           if ((b(d + 3) & 0xff) != 0x9d || (b(d + 4) & 0xff) != 0x01 || (b(d + 5) & 0xff) != 0x2a)
             return Left("webp: bad VP8 start code")
-          val w = ((b(d + 6) & 0xff) | ((b(d + 7) & 0xff) << 8)) & 0x3fff
-          val h = ((b(d + 8) & 0xff) | ((b(d + 9) & 0xff) << 8)) & 0x3fff
+          val w = le16(b, d + 6) & 0x3fff
+          val h = le16(b, d + 8) & 0x3fff
           val (cw, ch) = canvas.getOrElse((w, h))
           return Right((cw, ch, false))
         case _ => ()
@@ -147,24 +144,11 @@ object WebpVp8l {
 
   // ------------------------------------------------------------ bit reader
 
-  private final class BitReader(b: Array[Byte], var pos: Int, val end: Int) {
-    private var bitPos = 0
-    def readBits(n: Int): Int = { // LSB-first, n <= 24
-      var v = 0
-      var got = 0
-      while (got < n) {
-        if (pos >= end) throw new IllegalArgumentException("bitstream overrun")
-        val avail = 8 - bitPos
-        val take = math.min(n - got, avail)
-        val bits = ((b(pos) & 0xff) >>> bitPos) & ((1 << take) - 1)
-        v |= bits << got
-        got += take
-        bitPos += take
-        if (bitPos == 8) { bitPos = 0; pos += 1 }
-      }
-      v
-    }
-    def readBit(): Int = readBits(1)
+  /** `n` bits from `br`; running out of data throws "bitstream overrun". */
+  private def read(br: LsbBitReader, n: Int): Int = {
+    val v = br.bits(n)
+    if (v < 0) throw new IllegalArgumentException("bitstream overrun")
+    v
   }
 
   // ------------------------------------------------------------ huffman
@@ -219,12 +203,12 @@ object WebpVp8l {
         out
       }
     }
-    def decode(br: BitReader): Int = {
+    def decode(br: LsbBitReader): Int = {
       if (singleSymbol >= 0) return singleSymbol
       var code = 0
       var l = 0
       while (l < MaxLen) {
-        code = (code << 1) | br.readBit()
+        code = (code << 1) | read(br, 1)
         l += 1
         if (count(l) > 0 && code - firstCode(l) < count(l))
           return syms(firstIdx(l) + code - firstCode(l))
@@ -237,31 +221,31 @@ object WebpVp8l {
     Array(17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
   /** Read one prefix code (simple or normal form) over `alphabetSize`. */
-  private def readHuffmanCode(br: BitReader, alphabetSize: Int): Huffman = {
+  private def readHuffmanCode(br: LsbBitReader, alphabetSize: Int): Huffman = {
     val lengths = new Array[Int](alphabetSize)
-    if (br.readBit() == 1) { // simple code
-      val numSymbols = br.readBit() + 1
-      val first8 = br.readBit()
-      val s0 = br.readBits(if (first8 == 1) 8 else 1)
+    if (read(br, 1) == 1) { // simple code
+      val numSymbols = read(br, 1) + 1
+      val first8 = read(br, 1)
+      val s0 = read(br, if (first8 == 1) 8 else 1)
       if (s0 >= alphabetSize) throw new IllegalArgumentException("simple symbol out of range")
       if (numSymbols == 1) { lengths(s0) = 1; return new Huffman(lengths) } // single → 0-bit
-      val s1 = br.readBits(8)
+      val s1 = read(br, 8)
       if (s1 >= alphabetSize || s1 == s0) throw new IllegalArgumentException("simple symbol out of range")
       lengths(s0) = 1; lengths(s1) = 1
       // canonical order over (length, symbol): both length 1 → smaller
       // symbol gets code 0 (libwebp-verified by the probe fixtures)
       new Huffman(lengths)
     } else {
-      val numCodes = 4 + br.readBits(4)
+      val numCodes = 4 + read(br, 4)
       val clcl = new Array[Int](19)
       var i = 0
-      while (i < numCodes) { clcl(KCodeLengthOrder(i)) = br.readBits(3); i += 1 }
+      while (i < numCodes) { clcl(KCodeLengthOrder(i)) = read(br, 3); i += 1 }
       val clHuff = new Huffman(clcl)
       // optional cap on the number of length-decode operations
       var maxOps =
-        if (br.readBit() == 1) {
-          val lengthNBits = 2 + 2 * br.readBits(3)
-          val m = 2 + br.readBits(lengthNBits)
+        if (read(br, 1) == 1) {
+          val lengthNBits = 2 + 2 * read(br, 3)
+          val m = 2 + read(br, lengthNBits)
           if (m > alphabetSize) throw new IllegalArgumentException("max_symbol too large")
           m
         } else alphabetSize
@@ -279,7 +263,7 @@ object WebpVp8l {
             case 17 => (3, 3, 0)
             case _ => (7, 11, 0)
           }
-          val repeat = br.readBits(extraBits) + offset
+          val repeat = read(br, extraBits) + offset
           if (symbol + repeat > alphabetSize)
             throw new IllegalArgumentException("length repeat overflow")
           var r = 0
@@ -292,12 +276,12 @@ object WebpVp8l {
 
   // ------------------------------------------------------------ LZ77 helpers
 
-  private def prefixDecode(code: Int, br: BitReader): Int =
+  private def prefixDecode(code: Int, br: LsbBitReader): Int =
     if (code < 4) code + 1
     else {
       val extra = (code - 2) >> 1
       val offset = (2 + (code & 1)) << extra
-      offset + br.readBits(extra) + 1
+      offset + read(br, extra) + 1
     }
 
   /** RFC 9649 distance map: codes 1..120 are 2D neighbor offsets
@@ -345,11 +329,11 @@ object WebpVp8l {
   private def decodeVp8l(b: Array[Byte], off: Int, len: Int): Either[String, Jpeg.Image] = {
     if (len < 5) return Left("webp: vp8l too short")
     if ((b(off) & 0xff) != 0x2f) return Left("webp: bad vp8l signature")
-    val br = new BitReader(b, off + 1, off + len)
-    val w = br.readBits(14) + 1
-    val h = br.readBits(14) + 1
-    val alphaUsed = br.readBit()
-    val version = br.readBits(3)
+    val br = new LsbBitReader(b, off + 1, off + len)
+    val w = read(br, 14) + 1
+    val h = read(br, 14) + 1
+    val alphaUsed = read(br, 1)
+    val version = read(br, 3)
     if (version != 0) return Left("webp: bad vp8l version")
     if (w.toLong * h > MaxPixels) return Left("webp: image too large")
     val argb = decodeImageStream(br, w, h, isLevel0 = true)
@@ -372,29 +356,29 @@ object WebpVp8l {
   /** DecodeImageStream per the spec: [transforms (level 0 only)] →
     * color-cache info → prefix-code groups (meta prefix codes at level 0
     * only) → LZ77/cache pixel decode → inverse transforms. */
-  private def decodeImageStream(br: BitReader, wIn: Int, hIn: Int, isLevel0: Boolean): Array[Int] = {
+  private def decodeImageStream(br: LsbBitReader, wIn: Int, hIn: Int, isLevel0: Boolean): Array[Int] = {
     var w = wIn
     val h = hIn
     var transforms = List.empty[Transform]
     if (isLevel0) {
       var seen = 0
-      while (br.readBit() == 1) {
-        val t = br.readBits(2)
+      while (read(br, 1) == 1) {
+        val t = read(br, 2)
         if ((seen & (1 << t)) != 0) throw new IllegalArgumentException("duplicate transform")
         seen |= 1 << t
         t match {
           case 0 => // predictor
-            val bits = br.readBits(3) + 2
+            val bits = read(br, 3) + 2
             val tiles = decodeImageStream(br, subSampleSize(w, bits), subSampleSize(h, bits), isLevel0 = false)
             transforms ::= PredictorT(w, bits, tiles)
           case 1 => // cross-color
-            val bits = br.readBits(3) + 2
+            val bits = read(br, 3) + 2
             val tiles = decodeImageStream(br, subSampleSize(w, bits), subSampleSize(h, bits), isLevel0 = false)
             transforms ::= ColorT(w, bits, tiles)
           case 2 => // subtract green
             transforms ::= SubtractGreenT(w)
           case _ => // color indexing
-            val n = br.readBits(8) + 1
+            val n = read(br, 8) + 1
             val pal = decodeImageStream(br, n, 1, isLevel0 = false)
             // palette entries are delta-coded per channel
             var i = 1
@@ -412,16 +396,16 @@ object WebpVp8l {
     }
     // color cache
     var cacheBits = 0
-    if (br.readBit() == 1) {
-      cacheBits = br.readBits(4)
+    if (read(br, 1) == 1) {
+      cacheBits = read(br, 4)
       if (cacheBits < 1 || cacheBits > 11) throw new IllegalArgumentException("bad cache bits")
     }
     // meta prefix codes
     var metaBits = 0
     var metaImage: Array[Int] = null
     var numGroups = 1
-    if (isLevel0 && br.readBit() == 1) {
-      metaBits = br.readBits(3) + 2
+    if (isLevel0 && read(br, 1) == 1) {
+      metaBits = read(br, 3) + 2
       metaImage = decodeImageStream(br, subSampleSize(w, metaBits), subSampleSize(h, metaBits), isLevel0 = false)
       var mx = 0
       var i = 0
@@ -645,66 +629,48 @@ object WebpVp8l {
 
   // ------------------------------------------------------------ encoder twin
 
-  private final class BitWriter {
-    private val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    private var cur = 0
-    private var nbits = 0
-    def writeBits(v: Int, n: Int): Unit = { // LSB-first
-      var i = 0
-      while (i < n) {
-        cur |= ((v >>> i) & 1) << nbits
-        nbits += 1
-        if (nbits == 8) { buf += cur.toByte; cur = 0; nbits = 0 }
-        i += 1
-      }
-    }
-    /** a prefix code's bits, MSB of the code first. */
-    def writeCode(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { writeBits((code >>> i) & 1, 1); i -= 1 }
-    }
-    def toBytes: Array[Byte] = {
-      val out = if (nbits > 0) buf :+ cur.toByte else buf
-      out.toArray
-    }
+  /** A prefix code's bits, MSB of the code first. */
+  private def writeCode(bw: LsbBitWriter, code: Int, len: Int): Unit = {
+    var i = len - 1
+    while (i >= 0) { bw.bits((code >>> i) & 1, 1); i -= 1 }
   }
 
   /** Emit a literal prefix code: simple form for <= 2 used symbols,
     * otherwise a full 256-symbol 8-bit code (complete by construction)
     * with zero-padding to `alphabetSize` via an 18-run. */
-  private def writeLiteralCode(bw: BitWriter, used: Array[Int], alphabetSize: Int): (Int => (Int, Int)) = {
+  private def writeLiteralCode(bw: LsbBitWriter, used: Array[Int], alphabetSize: Int): (Int => (Int, Int)) = {
     if (used.length == 1) {
       val s = used(0)
-      bw.writeBits(1, 1) // simple
-      bw.writeBits(0, 1) // one symbol
-      if (s < 2) { bw.writeBits(0, 1); bw.writeBits(s, 1) }
-      else { bw.writeBits(1, 1); bw.writeBits(s, 8) }
+      bw.bits(1, 1) // simple
+      bw.bits(0, 1) // one symbol
+      if (s < 2) { bw.bits(0, 1); bw.bits(s, 1) }
+      else { bw.bits(1, 1); bw.bits(s, 8) }
       sym => { require(sym == s); (0, 0) }
     } else if (used.length == 2) {
       val lo = math.min(used(0), used(1))
       val hi = math.max(used(0), used(1))
-      bw.writeBits(1, 1) // simple
-      bw.writeBits(1, 1) // two symbols
-      if (lo < 2) { bw.writeBits(0, 1); bw.writeBits(lo, 1) }
-      else { bw.writeBits(1, 1); bw.writeBits(lo, 8) }
-      bw.writeBits(hi, 8)
+      bw.bits(1, 1) // simple
+      bw.bits(1, 1) // two symbols
+      if (lo < 2) { bw.bits(0, 1); bw.bits(lo, 1) }
+      else { bw.bits(1, 1); bw.bits(lo, 8) }
+      bw.bits(hi, 8)
       sym => if (sym == lo) (0, 1) else (1, 1)
     } else {
       // normal form: 256 symbols of length 8
-      bw.writeBits(0, 1) // not simple
-      bw.writeBits(12 - 4, 4) // num_code_lengths = 12 (through symbol 8)
+      bw.bits(0, 1) // not simple
+      bw.bits(12 - 4, 4) // num_code_lengths = 12 (through symbol 8)
       // kOrder prefix [17,18,0,1,2,3,4,5,16,6,7,8]: lengths 8→1, 16→1
       val lens = Array(0, 0, 0, 0, 0, 0, 0, 0, 1, 0, 0, 1)
-      lens.foreach(l => bw.writeBits(l, 3))
-      bw.writeBits(0, 1) // no max_symbol cap
+      lens.foreach(l => bw.bits(l, 3))
+      bw.bits(0, 1) // no max_symbol cap
       // code-length alphabet {8, 16} at length 1: canonical → 8 = '0', 16 = '1'
-      bw.writeCode(0, 1) // symbol 8: first length
+      writeCode(bw, 0, 1) // symbol 8: first length
       var remaining = 255
       while (remaining > 0) { // repeat-previous runs of 3..6
         val r = math.min(6, if (remaining - 6 >= 3 || remaining <= 6) remaining else remaining - 3)
         val take = if (r < 3) 3 else r // remaining >= 3 always by loop construction
-        bw.writeCode(1, 1) // symbol 16
-        bw.writeBits(take - 3, 2)
+        writeCode(bw, 1, 1) // symbol 16
+        bw.bits(take - 3, 2)
         remaining -= take
       }
       if (alphabetSize > 256) {
@@ -725,24 +691,24 @@ object WebpVp8l {
 
   /** Green code (alphabet 280, no cache): 256 literals at 8 bits plus a
     * 24-symbol zero tail via one 18-run. */
-  private def writeGreenCode(bw: BitWriter): Int => (Int, Int) = {
-    bw.writeBits(0, 1) // not simple
-    bw.writeBits(12 - 4, 4)
+  private def writeGreenCode(bw: LsbBitWriter): Int => (Int, Int) = {
+    bw.bits(0, 1) // not simple
+    bw.bits(12 - 4, 4)
     // lengths for [17,18,0,1,2,3,4,5,16,6,7,8]: 18→2, 16→2, 8→1
     val lens = Array(0, 2, 0, 0, 0, 0, 0, 0, 2, 0, 0, 1)
-    lens.foreach(l => bw.writeBits(l, 3))
-    bw.writeBits(0, 1) // no cap
+    lens.foreach(l => bw.bits(l, 3))
+    bw.bits(0, 1) // no cap
     // canonical over {8:1, 16:2, 18:2}: 8='0', 16='10', 18='11'
-    bw.writeCode(0, 1) // symbol 8
+    writeCode(bw, 0, 1) // symbol 8
     var remaining = 255
     while (remaining > 0) {
       val take = math.min(6, if (remaining - 6 >= 3 || remaining <= 6) remaining else remaining - 3)
-      bw.writeCode(2, 2) // symbol 16
-      bw.writeBits(take - 3, 2)
+      writeCode(bw, 2, 2) // symbol 16
+      bw.bits(take - 3, 2)
       remaining -= take
     }
-    bw.writeCode(3, 2) // symbol 18: 24 zeros
-    bw.writeBits(24 - 11, 7)
+    writeCode(bw, 3, 2) // symbol 18: 24 zeros
+    bw.bits(24 - 11, 7)
     sym => (sym, 8)
   }
 
@@ -753,19 +719,19 @@ object WebpVp8l {
     require(nc == 3 || nc == 4, "rgb or rgba")
     require(pix.length == w * h * nc, "pixel buffer size mismatch")
     require(w >= 1 && h >= 1 && w <= 16384 && h <= 16384, "bad dims")
-    val bw = new BitWriter
-    bw.writeBits(w - 1, 14)
-    bw.writeBits(h - 1, 14)
+    val bw = new LsbBitWriter
+    bw.bits(w - 1, 14)
+    bw.bits(h - 1, 14)
     val alphaUsed = nc == 4 && {
       var i = 3; var any = false
       while (i < pix.length && !any) { if ((pix(i) & 0xff) != 255) any = true; i += nc }
       any
     }
-    bw.writeBits(if (alphaUsed) 1 else 0, 1)
-    bw.writeBits(0, 3) // version
-    bw.writeBits(0, 1) // no transforms
-    bw.writeBits(0, 1) // no color cache
-    bw.writeBits(0, 1) // no meta prefix codes
+    bw.bits(if (alphaUsed) 1 else 0, 1)
+    bw.bits(0, 3) // version
+    bw.bits(0, 1) // no transforms
+    bw.bits(0, 1) // no color cache
+    bw.bits(0, 1) // no meta prefix codes
     val green = writeGreenCode(bw)
     def channelUsed(c: Int): Array[Int] = {
       val seen = new Array[Boolean](256)
@@ -781,20 +747,20 @@ object WebpVp8l {
     val blue = writeLiteralCode(bw, channelUsed(2), 256)
     val alpha = writeLiteralCode(bw, channelUsed(3), 256)
     // distance code: simple, single symbol 0 (never used)
-    bw.writeBits(1, 1); bw.writeBits(0, 1); bw.writeBits(0, 1); bw.writeBits(0, 1)
+    bw.bits(1, 1); bw.bits(0, 1); bw.bits(0, 1); bw.bits(0, 1)
     var i = 0
     while (i < w * h) {
       val r = pix(i * nc) & 0xff
       val g = pix(i * nc + 1) & 0xff
       val b = pix(i * nc + 2) & 0xff
       val a = if (nc == 4) pix(i * nc + 3) & 0xff else 255
-      val (gc, gl) = green(g); bw.writeCode(gc, gl)
-      val (rc, rl) = red(r); bw.writeCode(rc, rl)
-      val (bc, bl) = blue(b); bw.writeCode(bc, bl)
-      val (ac, al) = alpha(a); bw.writeCode(ac, al)
+      val (gc, gl) = green(g); writeCode(bw, gc, gl)
+      val (rc, rl) = red(r); writeCode(bw, rc, rl)
+      val (bc, bl) = blue(b); writeCode(bw, bc, bl)
+      val (ac, al) = alpha(a); writeCode(bw, ac, al)
       i += 1
     }
-    val payload = Array[Byte](0x2f) ++ bw.toBytes
+    val payload = Array[Byte](0x2f) ++ bw.result()
     wrapRiff(payload)
   }
 
@@ -803,13 +769,9 @@ object WebpVp8l {
     val padded = chunkLen + (chunkLen & 1)
     val total = 4 + 8 + padded // "WEBP" + chunk header + payload
     val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
-    out.write("RIFF".getBytes("US-ASCII")); le32(total)
+    out.write("RIFF".getBytes("US-ASCII")); le(out, total, 4)
     out.write("WEBP".getBytes("US-ASCII"))
-    out.write("VP8L".getBytes("US-ASCII")); le32(chunkLen)
+    out.write("VP8L".getBytes("US-ASCII")); le(out, chunkLen, 4)
     out.write(vp8l, 0, vp8l.length)
     if ((chunkLen & 1) == 1) out.write(0)
     out.toByteArray
@@ -849,11 +811,9 @@ object WebpVp8l {
     val durs = Vector.newBuilder[Int]
     var canvas: Array[Int] = null // ARGB
     var n = 0
-    def le24(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16)
     while (p + 8 <= b.length) {
       val tag = new String(b, p, 4, "US-ASCII")
-      val size = (b(p + 4) & 0xff) | ((b(p + 5) & 0xff) << 8) |
-        ((b(p + 6) & 0xff) << 16) | ((b(p + 7) & 0xff) << 24)
+      val size = le32(b, p + 4).toInt
       // subtraction form: p + 8 + size overflows Int for a forged
       // ~2^31 size and would wrap past an addition-form bound
       if (size < 0 || size > b.length - p - 8) return Left("webp: truncated chunk")
@@ -861,21 +821,21 @@ object WebpVp8l {
       tag match {
         case "VP8X" =>
           if (size < 10) return Left("webp: short VP8X")
-          cw = 1 + le24(d + 4); ch = 1 + le24(d + 7)
+          cw = 1 + le24(b, d + 4); ch = 1 + le24(b, d + 7)
           if (cw.toLong * ch > MaxPixels) return Left("webp: image too large")
           canvas = new Array[Int](cw * ch)
         case "ANIM" =>
           if (size < 6) return Left("webp: short ANIM")
-          loop = (b(d + 4) & 0xff) | ((b(d + 5) & 0xff) << 8)
+          loop = le16(b, d + 4)
         case "ANMF" =>
           if (canvas == null) return Left("webp: ANMF before VP8X")
           if (size < 16) return Left("webp: short ANMF")
           if (n >= maxFrames) return Left("webp: too many frames")
-          val fx = 2 * le24(d)
-          val fy = 2 * le24(d + 3)
-          val fw = 1 + le24(d + 6)
-          val fh = 1 + le24(d + 9)
-          val dur = le24(d + 12)
+          val fx = 2 * le24(b, d)
+          val fy = 2 * le24(b, d + 3)
+          val fw = 1 + le24(b, d + 6)
+          val fh = 1 + le24(b, d + 9)
+          val dur = le24(b, d + 12)
           val flags = b(d + 15) & 0xff
           val noBlend = (flags & 2) != 0
           val disposeBg = (flags & 1) != 0
@@ -886,8 +846,7 @@ object WebpVp8l {
           var framePixels: Jpeg.Image = null
           while (fp + 8 <= fEnd && framePixels == null) {
             val ftag = new String(b, fp, 4, "US-ASCII")
-            val fsize = (b(fp + 4) & 0xff) | ((b(fp + 5) & 0xff) << 8) |
-              ((b(fp + 6) & 0xff) << 16) | ((b(fp + 7) & 0xff) << 24)
+            val fsize = le32(b, fp + 4).toInt
             if (fsize < 0 || fsize > fEnd - fp - 8) return Left("webp: truncated frame chunk")
             ftag match {
               case "VP8L" =>
@@ -979,25 +938,20 @@ object WebpVp8l {
       frames: Seq[(Int, Int, Int, Int, Array[Byte], Int, Int, Boolean, Boolean)]): Array[Byte] = {
     require(cw >= 1 && ch >= 1 && frames.nonEmpty)
     val out = new java.io.ByteArrayOutputStream()
-    def le24(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff); out.write((v >> 16) & 0xff) }
-    def le32(v: Int): Unit = { le24(v); out.write((v >> 24) & 0xff) }
     def chunk(tag: String, payload: Array[Byte]): Unit = {
-      out.write(tag.getBytes("US-ASCII")); le32(payload.length)
+      out.write(tag.getBytes("US-ASCII")); le(out, payload.length, 4)
       out.write(payload, 0, payload.length)
       if ((payload.length & 1) == 1) out.write(0)
     }
     // VP8X: animation + alpha flags, canvas size
     val vp8x = new java.io.ByteArrayOutputStream()
     vp8x.write(0x12); vp8x.write(0); vp8x.write(0); vp8x.write(0) // ANIM | ALPHA
-    def w24(o: java.io.ByteArrayOutputStream, v: Int): Unit = {
-      o.write(v & 0xff); o.write((v >> 8) & 0xff); o.write((v >> 16) & 0xff)
-    }
-    w24(vp8x, cw - 1); w24(vp8x, ch - 1)
+    le(vp8x, cw - 1, 3); le(vp8x, ch - 1, 3)
     chunk("VP8X", vp8x.toByteArray)
     // ANIM: transparent background, loop count
     val anim = new java.io.ByteArrayOutputStream()
     anim.write(0); anim.write(0); anim.write(0); anim.write(0)
-    anim.write(loop & 0xff); anim.write((loop >> 8) & 0xff)
+    le(anim, loop, 2)
     chunk("ANIM", anim.toByteArray)
     frames.foreach { case (x, y, fw, fh, pix, nc, dur, noBlend, disposeBg) =>
       require(x % 2 == 0 && y % 2 == 0, "frame offsets must be even")
@@ -1005,16 +959,15 @@ object WebpVp8l {
       val vp8l = encode(pix, fw, fh, nc)
       // extract the VP8L chunk payload from the still container
       val chunkStart = 12
-      val csize = (vp8l(chunkStart + 4) & 0xff) | ((vp8l(chunkStart + 5) & 0xff) << 8) |
-        ((vp8l(chunkStart + 6) & 0xff) << 16) | ((vp8l(chunkStart + 7) & 0xff) << 24)
+      val csize = le32(vp8l, chunkStart + 4).toInt
       val payload = java.util.Arrays.copyOfRange(vp8l, chunkStart + 8, chunkStart + 8 + csize)
       val anmf = new java.io.ByteArrayOutputStream()
-      w24(anmf, x / 2); w24(anmf, y / 2); w24(anmf, fw - 1); w24(anmf, fh - 1)
-      w24(anmf, dur)
+      le(anmf, x / 2, 3); le(anmf, y / 2, 3); le(anmf, fw - 1, 3); le(anmf, fh - 1, 3)
+      le(anmf, dur, 3)
       anmf.write((if (noBlend) 2 else 0) | (if (disposeBg) 1 else 0))
       anmf.write("VP8L".getBytes("US-ASCII"))
       val ps = payload.length
-      anmf.write(ps & 0xff); anmf.write((ps >> 8) & 0xff); anmf.write((ps >> 16) & 0xff); anmf.write((ps >> 24) & 0xff)
+      le(anmf, ps, 4)
       anmf.write(payload, 0, payload.length)
       if ((ps & 1) == 1) anmf.write(0)
       chunk("ANMF", anmf.toByteArray)
@@ -1023,8 +976,7 @@ object WebpVp8l {
     val full = new java.io.ByteArrayOutputStream()
     full.write("RIFF".getBytes("US-ASCII"))
     val total = 4 + payload.length
-    full.write(total & 0xff); full.write((total >> 8) & 0xff)
-    full.write((total >> 16) & 0xff); full.write((total >> 24) & 0xff)
+    le(full, total, 4)
     full.write("WEBP".getBytes("US-ASCII"))
     full.write(payload, 0, payload.length)
     full.toByteArray

@@ -8,10 +8,6 @@ import graft.textnorm.{PyStr, TextNorm}
   */
 object Metrics {
 
-  /** Levenshtein edit distance over code points (editdistance.eval on str). */
-  def editDistance(ref: String, hyp: String): Int =
-    editDistanceSeq(ref.codePoints().toArray, hyp.codePoints().toArray)
-
   /** Generic two-row DP edit distance. */
   def editDistanceSeq[T](ref: Array[T], hyp: Array[T]): Int = {
     val n = ref.length

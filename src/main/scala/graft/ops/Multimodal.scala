@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.codec.Bytes
+
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * payloads with typed metadata, plus decode / feature-extract /
   * frame-sample stages.
@@ -51,12 +53,8 @@ object Multimodal {
       val out = new Array[Byte](HeaderLen + bodyLen)
       val magic = magics(modality).getBytes("US-ASCII")
       System.arraycopy(magic, 0, out, 0, 4)
-      def putInt(off: Int, v: Int): Unit = {
-        out(off) = (v >>> 24).toByte; out(off + 1) = (v >>> 16).toByte
-        out(off + 2) = (v >>> 8).toByte; out(off + 3) = v.toByte
-      }
-      putInt(4, meta.width); putInt(8, meta.height)
-      putInt(12, meta.sampleRate); putInt(16, meta.nFrames)
+      Bytes.be(out, 4, meta.width, 4); Bytes.be(out, 8, meta.height, 4)
+      Bytes.be(out, 12, meta.sampleRate, 4); Bytes.be(out, 16, meta.nFrames, 4)
       var z = seed
       var i = 0
       while (i < bodyLen) { // splitmix64 byte stream
@@ -75,11 +73,9 @@ object Multimodal {
       else {
         val magic = new String(payload, 0, 4, "US-ASCII")
         val modality = magics.collectFirst { case (m, g) if g == magic => m }
-        def getInt(off: Int): Int =
-          ((payload(off) & 0xff) << 24) | ((payload(off + 1) & 0xff) << 16) |
-            ((payload(off + 2) & 0xff) << 8) | (payload(off + 3) & 0xff)
         modality.map { m =>
-          (m, MediaMeta(getInt(4), getInt(8), getInt(12), getInt(16)),
+          (m, MediaMeta(Bytes.be32(payload, 4).toInt, Bytes.be32(payload, 8).toInt,
+            Bytes.be32(payload, 12).toInt, Bytes.be32(payload, 16).toInt),
             java.util.Arrays.copyOfRange(payload, HeaderLen, payload.length))
         }
       }
@@ -332,6 +328,10 @@ object Multimodal {
     while (i < n) { if (p(i) == 0) return None; i += 1 } // binary guard
     val head = new String(p, 0, n, java.nio.charset.StandardCharsets.ISO_8859_1)
     val lower = head.toLowerCase(java.util.Locale.ROOT)
+    // HTML first: an html page with inline <svg> is still a document
+    if (lower.contains("<!doctype html") || lower.contains("<html") ||
+      (lower.contains("<head") && lower.contains("<title")))
+      return Some(PayloadInfo("document", "html", 0, 0, 0, 0, 0L, decodable = true))
     val svgAt = lower.indexOf("<svg")
     if (svgAt >= 0 && (lower.startsWith("<svg") || lower.contains("<?xml") ||
       lower.contains("<!doctype svg") || svgAt < 256)) {
@@ -360,9 +360,6 @@ object Multimodal {
       return Some(PayloadInfo("image", "svg", math.max(w, 0), math.max(h, 0),
         0, 0, 0L, decodable = false))
     }
-    if (lower.contains("<!doctype html") || lower.contains("<html") ||
-      (lower.contains("<head") && lower.contains("<title")))
-      return Some(PayloadInfo("document", "html", 0, 0, 0, 0, 0L, decodable = true))
     None
   }
 
@@ -397,41 +394,31 @@ object Multimodal {
         if (p.length < 24 || p(12) != 'I' || p(13) != 'H' || p(14) != 'D' || p(15) != 'R')
           bad("image", "png")
         else {
-          def be(i: Int) = ((p(i) & 0xff) << 24) | ((p(i + 1) & 0xff) << 16) |
-            ((p(i + 2) & 0xff) << 8) | (p(i + 3) & 0xff)
-          img("png", be(16), be(20), ok = true)
+          img("png", Bytes.be32(p, 16).toInt, Bytes.be32(p, 20).toInt, ok = true)
         }
       }
       else if (Gif.isGif(p)) {
         if (p.length < 10) bad("image", "gif")
-        else img("gif", (p(6) & 0xff) | ((p(7) & 0xff) << 8), (p(8) & 0xff) | ((p(9) & 0xff) << 8), ok = true)
+        else img("gif", Bytes.le16(p, 6), Bytes.le16(p, 8), ok = true)
       }
       else if (Bmp.isBmp(p)) {
         if (p.length < 26) bad("image", "bmp")
-        else {
-          def le(i: Int) = (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8) |
-            ((p(i + 2) & 0xff) << 16) | ((p(i + 3) & 0xff) << 24)
-          img("bmp", le(18), math.abs(le(22)), ok = true)
-        }
+        else img("bmp", Bytes.le32(p, 18).toInt, math.abs(Bytes.le32(p, 22).toInt), ok = true)
       }
       else if (Tiff.isTiff(p)) {
         // minimal first-IFD walk for ImageWidth(256)/ImageLength(257)
         val le = (p(0) == 'I')
-        def u16(i: Int) = if (le) (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)
-          else ((p(i) & 0xff) << 8) | (p(i + 1) & 0xff)
-        def u32(i: Int) = if (le) (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8) | ((p(i + 2) & 0xffL) << 16) | ((p(i + 3) & 0xffL) << 24)
-          else ((p(i) & 0xffL) << 24) | ((p(i + 1) & 0xffL) << 16) | ((p(i + 2) & 0xffL) << 8) | (p(i + 3) & 0xffL)
-        val ifd = u32(4).toInt
+        val ifd = Bytes.u32(p, 4, le).toInt
         if (ifd < 0 || ifd + 2 > p.length) bad("image", "tiff")
         else {
-          val n = u16(ifd)
+          val n = Bytes.u16(p, ifd, le)
           var w = 0; var h = 0
           var k = 0
           while (k < n && ifd + 2 + 12 * (k + 1) <= p.length) {
             val e = ifd + 2 + 12 * k
-            val tag = u16(e)
-            val typ = u16(e + 2)
-            val v = if (typ == 3) u16(e + 8) else u32(e + 8).toInt
+            val tag = Bytes.u16(p, e, le)
+            val typ = Bytes.u16(p, e + 2, le)
+            val v = if (typ == 3) Bytes.u16(p, e + 8, le) else Bytes.u32(p, e + 8, le).toInt
             if (tag == 256) w = v
             if (tag == 257) h = v
             k += 1
@@ -457,14 +444,12 @@ object Multimodal {
         var chn = 0; var rate = 0; var bits = 0; var dataLen = -1
         while (q + 8 <= p.length && (chn == 0 || dataLen < 0)) {
           val tag = new String(p, q, 4, "US-ASCII")
-          val size = (p(q + 4) & 0xff) | ((p(q + 5) & 0xff) << 8) |
-            ((p(q + 6) & 0xff) << 16) | ((p(q + 7) & 0xff) << 24)
+          val size = Bytes.le32(p, q + 4).toInt
           if (size < 0 || size > p.length - q - 8) return bad("audio", "wav")
           if (tag == "fmt " && size >= 16) {
-            chn = (p(q + 10) & 0xff) | ((p(q + 11) & 0xff) << 8)
-            rate = (p(q + 12) & 0xff) | ((p(q + 13) & 0xff) << 8) |
-              ((p(q + 14) & 0xff) << 16) | ((p(q + 15) & 0xff) << 24)
-            bits = (p(q + 22) & 0xff) | ((p(q + 23) & 0xff) << 8)
+            chn = Bytes.le16(p, q + 10)
+            rate = Bytes.le32(p, q + 12).toInt
+            bits = Bytes.le16(p, q + 22)
           }
           if (tag == "data") dataLen = size
           q += 8 + size + (size & 1)

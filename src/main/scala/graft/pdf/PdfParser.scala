@@ -851,9 +851,7 @@ object PdfParser {
     // ---------------------------------------------------------- fonts
     private val fontCache = mutable.HashMap.empty[Int, FontDec]
 
-    /** Resource-name → decoder map for a page's /Resources /Font dict. */
-    def fontsOf(pg: PageObj): Map[String, FontDec] = fontsOfRes(pg.resources)
-
+    /** Resource-name → decoder map for a /Resources /Font dict. */
     def fontsOfRes(resources: Option[PDict]): Map[String, FontDec] =
       resources.map(r => resolve(r.m.getOrElse("Font", PNull))) match {
         case Some(fd: PDict) =>

@@ -41,6 +41,10 @@ class CodecFuzzSpec extends AnyFunSuite {
       }
     }
 
+  /** Decode `n` mutations of `valid`, each under [[WallBound]]. */
+  private def survive(codec: String, valid: Array[Byte], n: Int)(decode: Array[Byte] => Any): Unit =
+    for ((m, i) <- mutations(valid, n).zipWithIndex) WallBound(s"$codec mutation $i")(decode(m))
+
   private def flatJpeg(): Array[Byte] = {
     val pix = Array.tabulate[Byte](48 * 32)(i => ((i * 7) % 256).toByte)
     JpegEncoder.encodeGray(pix, 48, 32)
@@ -53,7 +57,7 @@ class CodecFuzzSpec extends AnyFunSuite {
       JpegEncoder.encodeGrayProgressive(pix, 48, 32),
       JpegEncoder.withExifOrientation(flatJpeg(), 6),
       JpegEncoder.encodeRgb444(Array.tabulate[Byte](16 * 16 * 3)(i => (i % 256).toByte), 16, 16))
-    for (seed <- seeds; m <- mutations(seed, 100)) {
+    for (seed <- seeds) survive("jpeg", seed, 100) { m =>
       Jpeg.decode(m) // Left or Right, never throw
       Jpeg.dimensions(m)
       Jpeg.exifOrientation(m)
@@ -64,7 +68,7 @@ class CodecFuzzSpec extends AnyFunSuite {
   test("png decode survives 300 mutations") {
     val pix = Array.tabulate[Byte](40 * 20)(i => ((i * 3) % 256).toByte)
     val seed = Png.encode(pix, 40, 20, 1)
-    for (m <- mutations(seed, 300)) Png.decode(m)
+    survive("png", seed, 300)(Png.decode)
     succeed
   }
 
@@ -72,10 +76,10 @@ class CodecFuzzSpec extends AnyFunSuite {
     for (d <- Seq(1, 2, 4)) {
       val vals = Array.tabulate[Byte](23 * 11)(i => (i % (1 << d)).toByte)
       val gray = Png.encodeGrayLowBit(vals, 23, 11, d)
-      for (m <- mutations(gray, 300)) Png.decode(m)
+      survive(s"png gray d=$d", gray, 300)(Png.decode)
       val pal = Array.tabulate[Byte]((1 << d) * 3)(i => (i * 11).toByte)
       val indexed = Png.encodeIndexed(vals, 23, 11, d, pal)
-      for (m <- mutations(indexed, 300)) Png.decode(m)
+      survive(s"png indexed d=$d", indexed, 300)(Png.decode)
     }
     succeed
   }
@@ -84,7 +88,7 @@ class CodecFuzzSpec extends AnyFunSuite {
     val pal = Array.tabulate[Byte](16 * 3)(i => (i * 5).toByte)
     val idx = Array.tabulate[Byte](30 * 18)(i => (i % 16).toByte)
     val seed = Gif.encode(idx, 30, 18, pal)
-    for (m <- mutations(seed, 300)) Gif.decode(m)
+    survive("gif", seed, 300)(Gif.decode)
     succeed
   }
 
@@ -95,20 +99,20 @@ class CodecFuzzSpec extends AnyFunSuite {
       Gif.FrameSpec(Array.tabulate[Byte](4 * 3)(i => (i % 16).toByte), 4, 2, 4, 3, 5, 2, transIdx = 7),
       Gif.FrameSpec(Array.tabulate[Byte](2 * 2)(i => (i % 4).toByte), 1, 1, 2, 2, 5, 3))
     val seed = Gif.encodeAnimated(12, 8, pal, 2, frames)
-    for (m <- mutations(seed, 300)) Gif.decodeFrames(m)
+    survive("animated gif", seed, 300)(Gif.decodeFrames(_))
     succeed
   }
 
   test("wav decode survives 300 mutations") {
     val seed = Wav.encode(Array.tabulate(400)(i => ((i * 37) % 2001 - 1000).toShort), 1, 16000)
-    for (m <- mutations(seed, 300)) Wav.decode(m)
+    survive("wav", seed, 300)(Wav.decode)
     succeed
   }
 
   test("ccitt decode survives 300 mutations") {
     val pix = Array.tabulate[Byte](64 * 16)(i => ((i / 5) % 2).toByte)
     val seed = CcittG4.encode(pix, 64, 16)
-    for (m <- mutations(seed, 300)) CcittG4.decode(m, 64, 16)
+    survive("ccitt", seed, 300)(CcittG4.decode(_, 64, 16))
     succeed
   }
 
@@ -125,14 +129,14 @@ class CodecFuzzSpec extends AnyFunSuite {
       graft.codec.Tiff.encodeCompressed(gray, 20, 12, 1, 8),
       graft.codec.Tiff.encodeTiled(gray, 20, 12, 1, 16, 16, 5, predictor = true),
       graft.codec.Tiff.encodeJpeg(Array.tabulate[Byte](16 * 16)(i => (i * 3).toByte), 16, 16, 8))
-    for (seed <- seeds; m <- mutations(seed, 100)) graft.codec.Tiff.decode(m)
+    for (seed <- seeds) survive("tiff", seed, 100)(graft.codec.Tiff.decode)
     succeed
   }
 
   test("bmp decode survives 300 mutations") {
     val rgb = Array.tabulate[Byte](21 * 14 * 3)(i => ((i * 5) % 256).toByte)
     val seed = graft.codec.Bmp.encode(rgb, 21, 14)
-    for (m <- mutations(seed, 300)) graft.codec.Bmp.decode(m)
+    survive("bmp", seed, 300)(graft.codec.Bmp.decode)
     succeed
   }
 
@@ -140,10 +144,10 @@ class CodecFuzzSpec extends AnyFunSuite {
     val pal = Array.tabulate[Byte](256 * 3)(i => (i * 7).toByte)
     val idx8 = Array.tabulate[Byte](19 * 9)(i => ((i / 3) % 50).toByte)
     val rle8 = graft.codec.Bmp.encodeRle8(idx8, 19, 9, pal)
-    for (m <- mutations(rle8, 300)) graft.codec.Bmp.decode(m)
+    survive("rle8 bmp", rle8, 300)(graft.codec.Bmp.decode)
     val idx4 = Array.tabulate[Byte](17 * 7)(i => (i % 16).toByte)
     val rle4 = graft.codec.Bmp.encodeRle4(idx4, 17, 7, pal)
-    for (m <- mutations(rle4, 300)) graft.codec.Bmp.decode(m)
+    survive("rle4 bmp", rle4, 300)(graft.codec.Bmp.decode)
     succeed
   }
 
@@ -151,7 +155,7 @@ class CodecFuzzSpec extends AnyFunSuite {
     val frames = (0 until 3).map(i =>
       JpegEncoder.encodeGray(Array.fill[Byte](16 * 16)((i * 70).toByte), 16, 16))
     val seed = graft.codec.Avi.encode(frames, 16, 16, 40000)
-    for (m <- mutations(seed, 300)) graft.codec.Avi.decode(m)
+    survive("avi", seed, 300)(graft.codec.Avi.decode)
     succeed
   }
 }

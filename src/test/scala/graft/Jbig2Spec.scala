@@ -192,8 +192,9 @@ class Jbig2Spec extends AnyFunSuite {
     want
   }
 
-  test("SDHUFF dictionary round-trips: MMR collective bitmaps (JDK-pinned leg)") {
-    val rng = new scala.util.Random(7)
+  // SDHUFF fixture: seed 7, six symbols on a 64x24 page
+  private object SdHuff {
+    private val rng = new scala.util.Random(7)
     val syms = Vector.tabulate(6) { i =>
       val sw = 2 + i % 4; val sh = 2 + i / 2
       (sw, sh, Array.fill[Byte](sw * sh)(if (rng.nextInt(3) == 0) 0 else 1))
@@ -202,14 +203,36 @@ class Jbig2Spec extends AnyFunSuite {
     val placements = (0 until 20).map { k =>
       (k % syms.length, 2 + (k * 3) % (w - 8), 1 + (k % 3) * 7)
     }
-    for (uncompressed <- Seq(false, true)) {
-      val stream = Jbig2.encodeSymbolPageHuff(w, h, syms, placements,
+    def stream(uncompressed: Boolean): Array[Byte] =
+      Jbig2.encodeSymbolPageHuff(w, h, syms, placements,
         huffText = false, uncompressed = uncompressed)
-      val im = Jbig2.decode(stream).fold(e => fail(s"uncompressed=$uncompressed: $e"), identity)
+  }
+
+  test("SDHUFF dictionary round-trips: MMR collective bitmaps (JDK-pinned leg)") {
+    import SdHuff._
+    for (uncompressed <- Seq(false, true)) {
+      val im = Jbig2.decode(stream(uncompressed))
+        .fold(e => fail(s"uncompressed=$uncompressed: $e"), identity)
       assert(im.width == w && im.height == h)
       val got = im.pixels.map(p => if (p != 0) 1 else 0)
       assert(got.sameElements(renderWant(w, h, syms, placements)),
         s"SDHUFF pixel drift (uncompressed=$uncompressed)")
+    }
+  }
+
+  test("SDHUFF dictionary data cut short ends in a Left, never a hang") {
+    // a reader that pads past the cut with zero bits decodes Table B.1
+    // export run 0 forever; the page-info segment takes 30 bytes and the
+    // dictionary's data-length field sits 7 bytes into its header
+    val lenAt = 30 + 7
+    for (uncompressed <- Seq(false, true); k <- 1 to 4) {
+      val good = SdHuff.stream(uncompressed)
+      val len = java.nio.ByteBuffer.wrap(good, lenAt, 4).getInt
+      val dataEnd = lenAt + 4 + len
+      val cut = good.take(dataEnd - k) ++ good.drop(dataEnd)
+      java.nio.ByteBuffer.wrap(cut, lenAt, 4).putInt(len - k)
+      val what = s"uncompressed=$uncompressed, $k byte(s) cut"
+      assert(WallBound(what)(Jbig2.decode(cut)).isLeft, what)
     }
   }
 
@@ -237,14 +260,14 @@ class Jbig2Spec extends AnyFunSuite {
     for (huffText <- Seq(false, true)) {
       val good = Jbig2.encodeSymbolPageHuff(30, 12, syms, placements, huffText = huffText)
       val rng = new scala.util.Random(if (huffText) 43 else 42)
-      (0 until 400).foreach { _ =>
+      (0 until 400).foreach { i =>
         val m = good.clone()
         m(rng.nextInt(m.length)) = rng.nextInt(256).toByte
-        Jbig2.decode(m) // Left or Right, never throw
+        WallBound(s"huffText=$huffText mutation $i")(Jbig2.decode(m)) // Left or Right, never throw
       }
       // every truncation fails closed
       for (n <- Seq(5, 20, good.length / 2, good.length - 3))
-        Jbig2.decode(java.util.Arrays.copyOf(good, n))
+        WallBound(s"huffText=$huffText cut to $n")(Jbig2.decode(java.util.Arrays.copyOf(good, n)))
     }
     succeed
   }
@@ -258,10 +281,10 @@ class Jbig2Spec extends AnyFunSuite {
     }
     // mutation fuzz
     val rng = new scala.util.Random(11)
-    (0 until 300).foreach { _ =>
+    (0 until 300).foreach { i =>
       val m = good.clone()
       m(rng.nextInt(m.length)) = (rng.nextInt(256)).toByte
-      Jbig2.decode(m) // must not throw; wrong pixels are fine, crashes are not
+      WallBound(s"mutation $i")(Jbig2.decode(m)) // must not throw; wrong pixels are fine, crashes are not
     }
     // symbol dictionary segment type → typed error
     val symDict = good.clone()
@@ -277,12 +300,12 @@ class Jbig2Spec extends AnyFunSuite {
       Vector((3, 3, Array.fill[Byte](9)(1)), (2, 2, Array[Byte](1, 0, 0, 1))),
       Seq((0, 1, 1), (1, 6, 2), (0, 11, 9), (1, 20, 14)))
     val rng = new scala.util.Random(47)
-    (0 until 2000).foreach { _ =>
+    (0 until 2000).foreach { i =>
       val m = good.clone()
       (0 until 1 + rng.nextInt(4)).foreach { _ =>
         m(rng.nextInt(m.length)) = rng.nextInt(256).toByte
       }
-      Jbig2.decode(m) // must not throw or over-allocate
+      WallBound(s"mutation $i")(Jbig2.decode(m)) // must not throw or over-allocate
     }
   }
 

@@ -2326,6 +2326,10 @@ class OpsSpec extends AnyFunSuite {
     val html = Multimodal.mediaInfo(
       "<!DOCTYPE html><html><head><title>t</title></head><body></body></html>".getBytes)
     assert(html.kind == "document" && html.format == "html" && html.decodable, html.toString)
+    // an html page with an inline <svg> early on is still a document
+    val inline = Multimodal.mediaInfo(
+      """<html><body><svg width="16" height="16"><rect/></svg><p>text</p></body></html>""".getBytes)
+    assert(inline.kind == "document" && inline.format == "html", inline.toString)
     // fragment with <html> deep inside the first KiB still sniffs
     val frag = Multimodal.mediaInfo(("x" * 200 + "<HTML lang=en>").getBytes)
     assert(frag.format == "html")
