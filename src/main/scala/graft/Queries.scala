@@ -5215,10 +5215,13 @@ object Queries {
           resolved.select(col("url"), col("warc_ts"), col("body").as("html")))
         .filter(col("extracted.status") === "ok")
         .select(col("url"), col("warc_ts"), col("extracted.markdown").as("md"))
+      // both windows key on the 8-byte digest of the markdown, so the
+      // exchange hashes a long instead of the full text
+      val mdKey = xxhash64(col("md"))
       val kept = extracted
         .withColumn("__rn", row_number().over(
-          Window.partitionBy(col("md")).orderBy(col("url"))))
-        .withColumn("n_docs", count(lit(1)).over(Window.partitionBy(col("md"))))
+          Window.partitionBy(mdKey).orderBy(col("url"))))
+        .withColumn("n_docs", count(lit(1)).over(Window.partitionBy(mdKey)))
         .filter(col("__rn") === 1)
       graft.sources.Warc.writeConversion(
         kept.select(col("url"), col("warc_ts"), lit(0).as("http_status"),

@@ -1,7 +1,7 @@
 package graft.extract
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.TableIO
 import graft.model.{ManifestRow, Page}
@@ -14,9 +14,16 @@ import graft.model.{ManifestRow, Page}
   *  - `part_id = pmod(xxhash64(url), P)` is a STABLE unit of work derived
   *    from data, not from task placement, so resume is valid across cluster
   *    sizes and reruns.
-  *  - The salt widens the shuffle key to P*S buckets so one hot host
-  *    (Zipf skew) cannot pin a straggler task; AQE coalescing re-merges
-  *    small outputs.
+  *  - One key serves shuffle and sink: `part_id·S + pmod(xxhash64(url,
+  *    warc_ts), S)` (`shuffleKey`). Its high part IS the results partition,
+  *    so each shuffle key feeds exactly one `part_id=` directory and each
+  *    write task writes at most one file per key it holds: ≤ S files per
+  *    part_id, ≤ P·S in total. The salt's low part spreads the captures of
+  *    one hot url over S keys so that url cannot pin a straggler task.
+  *  - The exchange has no fixed partition count, so AQE sizes it and
+  *    coalesces small buckets into fewer write tasks. A fixed
+  *    `repartition(n, …)` would make it REPARTITION_BY_NUM, which AQE never
+  *    coalesces: one write task per bucket however small the input.
   *  - Extraction is a narrow map after one shuffle; no driver collect
   *    anywhere; lineage is a partial+final hash aggregate.
   *  - Results are written partitioned by part_id (dynamic partition
@@ -41,9 +48,20 @@ object ExtractJob {
     }
   }
 
+  /** The unit of work and results partition of a page: a stable hash of
+    * its url, so resume holds across cluster sizes and reruns. */
+  private[graft] def partId(partitions: Int): Column =
+    pmod(xxhash64(col("url")), lit(partitions)).cast("int")
+
+  /** Shuffle key over a frame that carries `part_id`: part_id-major, so
+    * `key / salt == part_id` and every key belongs to one results
+    * directory; the low part spreads one url's captures over `salt` keys. */
+  private[graft] def shuffleKey(salt: Int): Column =
+    col("part_id") * lit(salt) + pmod(xxhash64(col("url"), col("warc_ts")), lit(salt))
+
   final case class RunSummary(total: Long, ok: Long, err: Long, skippedParts: Long)
 
-  /** Full run. `partitions` = P (work units), `salt` = S (hot-host spread). */
+  /** Full run. `partitions` = P (work units), `salt` = S (hot-url spread). */
   def run(
       spark: SparkSession,
       pages: DataFrame,
@@ -51,10 +69,11 @@ object ExtractJob {
       runTs: Timestamp,
       partitions: Int = 64,
       salt: Int = 4): RunSummary = {
+    require(partitions >= 1 && salt >= 1,
+      s"partitions and salt must be >= 1, got partitions=$partitions salt=$salt")
     import spark.implicits._
 
-    val withPart = pages.withColumn("part_id",
-      pmod(xxhash64(col("url")), lit(partitions)).cast("int"))
+    val withPart = pages.withColumn("part_id", partId(partitions))
 
     // resume: skip partitions already recorded 'done' in the manifest.
     // done/todo part-id sets are tiny (≤ `partitions` ints) — collecting
@@ -73,10 +92,8 @@ object ExtractJob {
     val todoParts: Set[Int] =
       todo.select($"part_id").distinct().as[Int].collect().toSet
 
-    // salted repartition: key spreads each part over `salt` buckets so a
-    // skewed host's documents land in several tasks
-    val salted = todo.repartition(partitions * salt,
-      pmod(xxhash64($"url", $"warc_ts"), lit(partitions * salt)))
+    // no fixed count: AQE sizes the exchange (see the scale notes above)
+    val salted = todo.repartition(shuffleKey(salt))
 
     val results = extractedDf(salted).select(
       $"url", $"warc_ts", $"lang",

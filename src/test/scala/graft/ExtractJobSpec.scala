@@ -104,6 +104,46 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(chk1 == chk2)
   }
 
+  test("sink layout: every results part_id directory holds at most `salt` files") {
+    val pages = Synth.pagesDs(spark, 200, seed = 42L, parallelism = 4).toDF()
+    val wh = SparkTestBase.tempDir("wh-layout")
+    val salt = 2
+    ExtractJob.run(spark, pages, new ParquetTableIO(wh), runTs, partitions = 16, salt = salt)
+    val dirs = new java.io.File(s"$wh/results").listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("part_id="))
+    assert(dirs.nonEmpty)
+    dirs.foreach { d =>
+      val files = d.listFiles().count(_.getName.endsWith(".parquet"))
+      assert(files >= 1 && files <= salt, s"${d.getName} holds $files parquet files")
+    }
+  }
+
+  test("lineage is identical at any salt") {
+    import spark.implicits._
+    val pages = Synth.pagesDs(spark, 200, seed = 42L, parallelism = 4).toDF()
+    def lineage(salt: Int): Seq[(Int, Long, Long, Long, Long)] = {
+      val io = new ParquetTableIO(SparkTestBase.tempDir(s"wh-salt$salt"))
+      ExtractJob.run(spark, pages, io, runTs, partitions = 16, salt = salt)
+      io.readTable(spark, "lineage")
+        .select($"part_id", $"row_count", $"ok_count", $"err_count", $"checksum")
+        .as[(Int, Long, Long, Long, Long)].collect().toSeq.sortBy(_._1)
+    }
+    val one = lineage(1)
+    assert(one.map(_._2).sum == 200)
+    assert(one == lineage(4))
+  }
+
+  test("sizes below 1 are rejected before anything is read or written") {
+    val pages = Synth.pagesDs(spark, 10, seed = 42L, parallelism = 1).toDF()
+    val wh = SparkTestBase.tempDir("wh-bad")
+    val io = new ParquetTableIO(wh)
+    assertThrows[IllegalArgumentException](
+      ExtractJob.run(spark, pages, io, runTs, partitions = 16, salt = 0))
+    assertThrows[IllegalArgumentException](
+      ExtractJob.run(spark, pages, io, runTs, partitions = 0, salt = 4))
+    assert(new java.io.File(wh).list().isEmpty)
+  }
+
   test("content-class hint beats an equally-sized link farm without article tags") {
     import graft.extract.HtmlExtractor
     // no <main>/<article>: selection must fall back to scoring; the link

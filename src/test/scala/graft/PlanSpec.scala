@@ -52,9 +52,11 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("extraction pipeline plan: no shuffle beyond the explicit salted repartition") {
+    import graft.extract.ExtractJob
     val pages = graft.synth.Synth.pagesDs(spark, 50L, seed = 42L).toDF()
-      .repartition(8, pmod(xxhash64(col("url")), lit(8)))
-    val out = graft.extract.ExtractJob.extractedDf(pages)
+      .withColumn("part_id", ExtractJob.partId(8))
+    val salted = pages.repartition(ExtractJob.shuffleKey(2))
+    val out = ExtractJob.extractedDf(salted)
       .select(col("url"), col("extracted.status"))
     val plan = physicalPlan(out)
     val exchanges = plan.linesIterator.count(_.contains("Exchange"))
@@ -813,6 +815,26 @@ class PlanSpec extends AnyFunSuite {
       // groupBy's clustering: the manifest agg adds NO second shuffle
       assert(lines.count(l => l.contains("Exchange") && !l.contains("BroadcastExchange")) == 1, plan)
       lines.filter(_.contains("Exchange")).foreach(l => assert(!l.contains("text#"), l))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+  }
+
+  test("q233 dedup windows shuffle on the markdown digest, never the raw md text") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = SparkEntry.queries("q233_crawl_loop")(spark, sf).queryExecution.executedPlan
+      def rawMd(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+        keys.exists { case a: AttributeReference => a.name == "md"; case _ => false }
+      val windows = plan.collect { case w: WindowExec => w.partitionSpec }
+      assert(windows.nonEmpty, plan.toString)
+      windows.foreach(spec => assert(!rawMd(spec), spec.mkString(", ")))
+      plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+        .collect { case h: HashPartitioning => h.expressions }
+        .foreach(keys => assert(!rawMd(keys), keys.mkString(", ")))
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark-backed suites. */
@@ -18,6 +20,21 @@ object SparkTestBase {
     s
   }
 
+  /** One temp root per test JVM, deleted with everything under it when the
+    * JVM exits, so a suite run leaves no warehouses behind. */
+  private lazy val tempRoot: Path = {
+    val root = Files.createTempDirectory("graft-test-")
+    sys.addShutdownHook(deleteTree(root))
+    root
+  }
+
+  private def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
+
   def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    Files.createTempDirectory(tempRoot, prefix).toString
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.io.{ParquetTableIO, TableIO}
@@ -16,7 +15,7 @@ class TableIOSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def fresh(): (TableIO, String) = {
-    val dir = Files.createTempDirectory("tio").toString
+    val dir = SparkTestBase.tempDir("tio")
     (new ParquetTableIO(dir), dir)
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.functions._
@@ -55,7 +54,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("sink + source: distributed write, per-file partitions, full round-trip") {
-    val dir = Files.createTempDirectory("warc_rt").toString
+    val dir = SparkTestBase.tempDir("warc_rt")
     val df = (1 to 20).map(i =>
         (s"http://w.example/doc/$i", new java.sql.Timestamp((1577836800L + i) * 1000L),
           200, "text/html", s"<html>doc $i content</html>".getBytes(UTF_8)))
@@ -78,7 +77,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("source: column pruning reaches the scan (ReadSchema has only url)") {
-    val dir = Files.createTempDirectory("warc_prune").toString
+    val dir = SparkTestBase.tempDir("warc_prune")
     val df = Seq(("http://p.example/1", new java.sql.Timestamp(0L), 200, "text/html",
         "body".getBytes(UTF_8)))
       .toDF("url", "warc_ts", "http_status", "content_type", "body")
@@ -93,7 +92,7 @@ class WarcSpec extends AnyFunSuite {
     // the Common-Crawl shape: pages archived as .warc.gz, read back
     // through the DSv2 source, and fed to the same extraction stage the
     // parquet path uses — extracted text must be byte-identical.
-    val dir = Files.createTempDirectory("warc_e2e").toString
+    val dir = SparkTestBase.tempDir("warc_e2e")
     val pages = graft.synth.Synth.pagesDs(spark, 40L, seed = 7L).toDF()
     Warc.write(pages.select($"url", $"warc_ts", lit(200).as("http_status"),
       lit("text/html; charset=utf-8").as("content_type"), $"html".as("body")), dir)
@@ -140,7 +139,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("WET export: extraction published as envelope-free conversion records, round-trips") {
-    val dir = Files.createTempDirectory("warc_wet").toString
+    val dir = SparkTestBase.tempDir("warc_wet")
     val pages = graft.synth.Synth.pagesDs(spark, 15L, seed = 3L).toDF()
     val ext = graft.extract.ExtractJob.extractedDf(pages.select($"url", $"warc_ts", $"html"))
       .select($"url", $"warc_ts", lit(0).as("http_status"),
@@ -159,7 +158,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("source: warc_file lineage column and empty-dir scan") {
-    val dir = Files.createTempDirectory("warc_lin").toString
+    val dir = SparkTestBase.tempDir("warc_lin")
     val df = Seq(("http://l.example/1", new java.sql.Timestamp(0L), 200, "text/html",
         "x".getBytes(UTF_8)))
       .toDF("url", "warc_ts", "http_status", "content_type", "body")
@@ -167,7 +166,7 @@ class WarcSpec extends AnyFunSuite {
     val f = spark.read.format("graft.sources.WarcSource").load(dir)
       .select("warc_file").as[String].head()
     assert(f.endsWith(".warc.gz"), f)
-    val empty = Files.createTempDirectory("warc_empty").toString
+    val empty = SparkTestBase.tempDir("warc_empty")
     assert(spark.read.format("graft.sources.WarcSource").load(empty).count() == 0L)
   }
 
@@ -276,7 +275,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("sink dedupRevisits + resolveRevisits restores every payload") {
-    val dir = Files.createTempDirectory("warc_rev").toString
+    val dir = SparkTestBase.tempDir("warc_rev")
     // 12 urls, 4 distinct bodies (i % 4) — 8 rows become revisits
     val rows = (1 to 12).map(i => (s"http://r.example/p$i",
       new java.sql.Timestamp(1000L * i), 200, "text/html",
@@ -301,7 +300,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("resolveRevisits surfaces orphan revisits (original in an unloaded shard)") {
-    val dir = Files.createTempDirectory("warc_orphan").toString
+    val dir = SparkTestBase.tempDir("warc_orphan")
     val rows = Seq(
       ("http://o.example/a", new java.sql.Timestamp(1000L), 200, "text/html",
         "present body".getBytes(UTF_8)),
@@ -346,7 +345,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("truncateAt stores the capped prefix with WARC-Truncated: length") {
-    val dir = Files.createTempDirectory("warc_trunc").toString
+    val dir = SparkTestBase.tempDir("warc_trunc")
     val rows = Seq(
       ("http://t.example/short", new java.sql.Timestamp(0L), 200, "text/html",
         ("x" * 50).getBytes(UTF_8)),
@@ -371,7 +370,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("CDX sidecar offsets support exact random-access fetch") {
-    val dir = Files.createTempDirectory("warc_cdx").toString
+    val dir = SparkTestBase.tempDir("warc_cdx")
     val rows = (1 to 15).map(i => (s"http://x.example/q$i",
       new java.sql.Timestamp(1000L * i), 200, "text/html",
       (s"indexed $i " + ("pad " * i)).getBytes(UTF_8)))
@@ -404,7 +403,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("filter pushdown: record_type/url predicates reach the scan and stay exact") {
-    val dir = Files.createTempDirectory("warc_push").toString
+    val dir = SparkTestBase.tempDir("warc_push")
     val rows = (1 to 10).map(i => (s"http://p.example/${if (i <= 5) "a" else "b"}$i",
       new java.sql.Timestamp(1000L * i), 200, "text/html",
       s"same body".getBytes(UTF_8)))
@@ -435,7 +434,7 @@ class WarcSpec extends AnyFunSuite {
     assert(MetaHarvest.links(html) == Seq("http://x/1", "/two"))
     assert(MetaHarvest.links(null) == Nil)
     assert(MetaHarvest.links("<a href='h'>" * 7, cap = 3).length == 3)
-    val dir = Files.createTempDirectory("warc_wat").toString
+    val dir = SparkTestBase.tempDir("warc_wat")
     val pages = Seq(("http://w.example/p1", new java.sql.Timestamp(0L), html))
       .toDF("url", "warc_ts", "html")
     Warc.writeMetadata(MetaHarvest.watFrame(pages, "url", "warc_ts", "html"), dir)
@@ -457,7 +456,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("sink + source: gzip+chunked shards round-trip through WarcSource") {
-    val dir = Files.createTempDirectory("warc_coded").toString
+    val dir = SparkTestBase.tempDir("warc_coded")
     val rows = (1 to 20).map(i => (s"http://w.example/$i",
       new java.sql.Timestamp(1000L * i), 200, "text/html",
       (s"doc $i " + ("content " * i)).getBytes(UTF_8)))
